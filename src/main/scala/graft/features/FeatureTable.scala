@@ -1,6 +1,7 @@
 package graft.features
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.time.LocalDate
 import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.DateType
@@ -65,6 +66,20 @@ final case class FeatureTable(root: String, keys: Seq[String]) {
   def read(spark: SparkSession): DataFrame = {
     require(exists, s"feature table $root does not exist")
     spark.read.parquet(dataDir.toString)
+  }
+
+  /** Whether the table holds a snapshot of `day`: its `day=<day>` partition
+    * directory holds a parquet file. A file-system probe, no Spark job — a
+    * table keyed by a trailing `day` is always written partitioned by it.
+    */
+  def hasDay(day: LocalDate): Boolean = {
+    require(keys.last == "day", s"feature table $root is not keyed by day")
+    val dir = dataDir.resolve(s"day=$day")
+    exists && Files.isDirectory(dir) && {
+      val listing = Files.list(dir)
+      try listing.anyMatch(_.getFileName.toString.endsWith(".parquet"))
+      finally listing.close()
+    }
   }
 
   private def writeAtomic(df: DataFrame): Unit = {

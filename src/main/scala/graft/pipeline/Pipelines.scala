@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import java.time.LocalDate
+import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Retail
@@ -26,14 +26,16 @@ final case class PipelineConfig(
     trainer: PropensityTrainer.Config = PipelineConfig.defaultTrainer)
 
 object PipelineConfig {
-  /** Default pipeline trainer: a modest 9-point GBT grid capped at depth
-    * 12. `PropensityTrainer.Config()`'s own default is the REFERENCE
-    * budget — a 50-eval random search reaching depth 20 (`04b:391-395`) —
-    * which is a deliberate cluster-scale job (MLlib GBT has no histogram
-    * binning; deep trees are disproportionately slow). A pipeline caller
-    * relying on defaults should get a sane cost, not a silent 50-trial
-    * sweep; the reference budget stays one explicit opt-in away:
-    * `cfg.copy(trainer = PropensityTrainer.Config())`.
+  /** Default pipeline trainer: a 9-point GBT grid capped at depth 12.
+    * Its cost is cluster-scale, not local: on `local[4]` at sf0.01 (a
+    * ~1,500-row slice, 1,164 features) no single commodity's fit finished
+    * within 15 minutes. `PropensityTrainer.Config()`'s own default is the
+    * reference's budget — a 50-eval random search reaching depth 20
+    * (`04b:391-395`) — one explicit opt-in away:
+    * `cfg.copy(trainer = PropensityTrainer.Config())`. For a local run
+    * pass the linear trainer `Flagship` uses:
+    * `PropensityTrainer.Config(algo = "lr", regParams = Seq(0.0, 0.01),
+    * maxIter = 10, parallelism = 2)`.
     */
   val defaultTrainer: PropensityTrainer.Config = PropensityTrainer.Config(
     maxDepths = Seq(5, 8, 12), stepSizes = Seq(0.05, 0.1, 0.3))
@@ -96,7 +98,8 @@ final class PropensityPipeline(spark: SparkSession, cfg: PipelineConfig) {
     computeFeatures(cur)
   }
 
-  private def lookups = Seq(
+  /** The point-in-time lookups of every grain, at full width. */
+  def lookups: Seq[TrainingSetBuilder.Lookup] = Seq(
     TrainingSetBuilder.Lookup(householdFeatures.read(spark),
       Seq("household_key"), "household__"),
     TrainingSetBuilder.Lookup(commodityFeatures.read(spark),
@@ -148,56 +151,82 @@ final class PropensityPipeline(spark: SparkSession, cfg: PipelineConfig) {
     }
   }
 
+  /** The commodities scored today with their Production models, each
+    * loaded once: (commodity_desc, commodity_clean, model). The top-k
+    * control set drifts daily; a commodity that entered since the last
+    * weekly train has no Production model yet and is skipped loudly
+    * instead of failing the whole daily job.
+    */
+  def productionModels(): Seq[(String, String, PipelineModel)] = {
+    val all = commodities.select("commodity_desc", "commodity_clean")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    // same collision guard as trainAll: two descs sanitizing to one
+    // clean name would score both against one model
+    require(all.map(_._2).distinct.size == all.size,
+      s"commodity_clean collision in ${all.map(_._2).mkString(",")}")
+    val (cs, missing) = all.partition { case (_, clean) => models.hasProduction(clean) }
+    missing.foreach { case (desc, clean) =>
+      System.err.println(s"[scoreAll] skipping '$desc': no Production model '$clean'")
+    }
+    require(cs.nonEmpty, "scoreAll: no commodity has a Production model — run trainAll first")
+    cs.map { case (desc, clean) => (desc, clean, models.loadProduction(clean)) }
+  }
+
+  /** The scoring spine at `day`: one row per (household, scored commodity)
+    * with the features the models read, absent ones filled with 0.0.
+    *
+    * Each lookup is narrowed to the union of the models' assembler inputs
+    * before the join — `score_batch`'s feature-spec semantics
+    * (`04c:169-186`) — so a model fitted on a few columns does not pull
+    * the full 1,164-column width. The key frame is coalesced to
+    * ⌈rows / `spark.sql.inMemoryColumnarStorage.batchSize`⌉ partitions
+    * (at least one, never more than it has) before the lookups, so each
+    * cached partition fills at least one column batch instead of holding
+    * a few rows per silver bucket.
+    */
+  def scoringSpine(day: LocalDate,
+      scored: Seq[(String, String, PipelineModel)]): DataFrame = {
+    val keys = tx.select("household_key").distinct()
+      .crossJoin(broadcast(commodities.select("commodity_desc")
+        .filter(col("commodity_desc").isin(scored.map(_._1): _*))))
+      .withColumn("day", lit(java.sql.Date.valueOf(day)))
+    val batch = spark.sessionState.conf.columnBatchSize
+    val parts = math.max(1, math.ceil(keys.count().toDouble / batch).toInt)
+    val inputs = scored.flatMap { case (_, _, model) => Scorer.inputColumns(model) }.toSet
+    TrainingSetBuilder.build(keys.coalesce(parts), lookups.map(_.prune(inputs)))
+  }
+
   /** Daily (`04c`): refresh features if today's snapshot is missing (the
     * exact-day PIT join would otherwise silently score on fillna zeros),
-    * score every (household, commodity), then write BOTH sinks — the
-    * pivoted table in ONE grouped merge per day (not one table rewrite per
-    * commodity) and the unpivoted append (S6).
+    * score every (household, commodity) with a Production model through
+    * the narrow, row-sized [[scoringSpine]], then write BOTH sinks — the
+    * pivoted table in ONE per-column merge per day ([[MergeWriter.mergeWide]],
+    * `04c:189-202`: a commodity not scored today keeps its earlier score)
+    * and the unpivoted day partition (S6).
     */
   def scoreAll(): DataFrame = {
     val cur = currentDay
-    val d = java.sql.Date.valueOf(cur)
     // freshness gate checks ALL THREE feature tables: a computeFeatures
     // crash between the three upserts would otherwise leave commodity /
     // household-commodity snapshots missing and scoring would silently
     // proceed on fillna-0.0 features
-    def hasSnapshot(t: FeatureTable): Boolean = t.exists &&
-      t.read(spark).filter(col("day") === lit(d)).limit(1).count() > 0
     val hasToday = Seq(householdFeatures, commodityFeatures,
-      householdCommodityFeatures).forall(hasSnapshot)
+      householdCommodityFeatures).forall(_.hasDay(cur))
     if (!hasToday) computeFeatures(cur)
-    val spine0 = tx.select("household_key").distinct()
-      .crossJoin(broadcast(commodities.select("commodity_desc", "commodity_clean")))
-      .withColumn("day", lit(d))
-    val spine = TrainingSetBuilder.build(spine0, lookups).cache()
+    val production = productionModels()
+    // cached: every commodity's scorer reads it
+    val spine = scoringSpine(cur, production).cache()
     var unpivoted: DataFrame = null
     try {
-      val all = commodities.select("commodity_desc", "commodity_clean")
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      // same collision guard as trainAll: two descs sanitizing to one
-      // clean name would score both against one model
-      require(all.map(_._2).distinct.size == all.size,
-        s"commodity_clean collision in ${all.map(_._2).mkString(",")}")
-      // the top-k control set drifts daily; a commodity that entered
-      // since the last weekly train has no Production model yet — skip
-      // it loudly instead of failing the whole daily job
-      val (cs, missing) = all.partition { case (_, clean) => models.hasProduction(clean) }
-      missing.foreach { case (desc, clean) =>
-        System.err.println(s"[scoreAll] skipping '$desc': no Production model '$clean'")
-      }
-      require(cs.nonEmpty, "scoreAll: no commodity has a Production model — run trainAll first")
-      val scored = cs.map { case (desc, clean) =>
-        val slice = spine.filter(col("commodity_desc") === desc)
-        val model = models.loadProduction(clean)
-        Scorer.score(model, slice)
+      unpivoted = production.map { case (desc, clean, model) =>
+        Scorer.score(model, spine.filter(col("commodity_desc") === desc))
           .withColumn("commodity_clean", lit(clean))
-      }
-      unpivoted = scored.reduce(_.unionByName(_)).cache()
+      }.reduce(_.unionByName(_)).cache()
       val pivotedBatch = MergeWriter.pivotScores(
         unpivoted.withColumnRenamed("commodity_desc", "__cd")
           .withColumnRenamed("commodity_clean", "commodity_desc"),
-        cs.map(_._2))
-      pivoted.upsert(spark, pivotedBatch)
+        production.map(_._2))
+      MergeWriter.mergeWide(spark, pivoted, pivotedBatch)
       val out = unpivoted.drop("commodity_clean")
       // day-partitioned DYNAMIC overwrite: a re-run of the same day (or a
       // retry after a crash between the two sinks) replaces that day's

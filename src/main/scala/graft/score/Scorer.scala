@@ -1,6 +1,7 @@
 package graft.score
 
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -23,6 +24,19 @@ object Scorer {
       .select(
         col("household_key"), col("day"), col("commodity_desc"),
         vector_to_array(col("probability")).getItem(1).as("prediction"))
+
+  /** The spine columns `model` reads: the inputs of its `VectorAssembler`
+    * stages — the engine's form of the feature spec the reference logs with
+    * each model and `fs.score_batch` looks up (`04c:169-186`). A model
+    * without an assembler declares no inputs, so it fails here rather than
+    * being scored against the full feature width.
+    */
+  def inputColumns(model: PipelineModel): Seq[String] = {
+    val inputs = model.stages.toSeq.collect { case va: VectorAssembler => va.getInputCols.toSeq }
+    require(inputs.nonEmpty,
+      s"model ${model.uid} has no VectorAssembler stage, so its input columns are unknown")
+    inputs.flatten.distinct
+  }
 
   /** Streaming twin of [[score]] (SURVEY.md §2.9 extension): the SAME
     * PipelineModel serves a feature stream — `readStream` source →

@@ -1,6 +1,7 @@
 package graft.train
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
@@ -209,8 +210,12 @@ object PropensityTrainer {
     val assembler = new VectorAssembler()
       .setInputCols(featureCols.toArray).setOutputCol("features")
       .setHandleInvalid("keep")
+    // two classes fixed by the label's metadata: a fitted part without a
+    // positive (a rare commodity's validation split) would otherwise fit a
+    // one-class model whose evaluation throws
+    val binary = NominalAttribute.defaultAttr.withName("label").withNumValues(2).toMetadata()
     val labeled = trainingSet
-      .withColumn("label", col("purchased").cast("double"))
+      .withColumn("label", col("purchased").cast("double").as("label", binary))
 
     val estimator = cfg.algo match {
       case "lr" =>

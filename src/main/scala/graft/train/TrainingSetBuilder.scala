@@ -34,14 +34,30 @@ object TrainingSetBuilder {
       grainKeys: Seq[String],
       prefix: String,
       exclude: Seq[String] = Nil,
-      broadcastable: Boolean = false)
+      broadcastable: Boolean = false) {
+
+    def joinKeys(joinDay: Boolean): Seq[String] =
+      if (joinDay) grainKeys :+ "day" else grainKeys
+
+    /** The feature columns [[lookup]] brings in, before prefixing. */
+    def metricCols(joinDay: Boolean): Seq[String] = features.columns.toSeq
+      .filterNot(joinKeys(joinDay).contains).filterNot(exclude.contains)
+
+    /** This lookup, for the day-keyed join, narrowed to the features whose
+      * prefixed names are in `wanted` — the reference's `score_batch` reads
+      * only the features in a model's logged spec (`04c:169-186`). The
+      * projection sits on the feature table itself, so the scan reads only
+      * those columns.
+      */
+    def prune(wanted: Set[String]): Lookup = copy(features = features.select(
+      (joinKeys(joinDay = true) ++
+        metricCols(joinDay = true).filter(c => wanted(prefix + c))).map(col): _*))
+  }
 
   def lookup(spine: DataFrame, lk: Lookup, joinDay: Boolean = true): DataFrame = {
-    val joinKeys = if (joinDay) lk.grainKeys :+ "day" else lk.grainKeys
-    val metricCols = lk.features.columns.toSeq
-      .filterNot(joinKeys.contains).filterNot(lk.exclude.contains)
+    val joinKeys = lk.joinKeys(joinDay)
     val projected = lk.features.select(
-      joinKeys.map(col) ++ metricCols.map(c => col(c).as(s"${lk.prefix}$c")): _*)
+      joinKeys.map(col) ++ lk.metricCols(joinDay).map(c => col(c).as(s"${lk.prefix}$c")): _*)
     spine.join(if (lk.broadcastable) broadcast(projected) else projected,
       joinKeys, "left_outer")
   }

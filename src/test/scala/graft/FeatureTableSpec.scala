@@ -75,4 +75,17 @@ class FeatureTableSpec extends AnyFunSuite {
       .select("v").as[Double].head()
     assert(v == 3.0 && t.read(spark).count() == 2)
   }
+
+  test("hasDay: a day's partition with a parquet file is present, others absent") {
+    val t = FeatureTable(tmp(), Seq("k", "day"))
+    val day = java.time.LocalDate.parse("2024-01-01")
+    assert(!t.hasDay(day), "a table never written holds no day")
+    t.upsert(spark, Seq((1L, java.sql.Date.valueOf(day), 1.0)).toDF("k", "day", "v"))
+    assert(t.hasDay(day))
+    assert(!t.hasDay(day.plusDays(1)))
+    // a partition directory without a data file is no snapshot
+    val empty = java.nio.file.Paths.get(t.root, "data", s"day=${day.plusDays(2)}")
+    java.nio.file.Files.createDirectories(empty)
+    assert(!t.hasDay(day.plusDays(2)))
+  }
 }

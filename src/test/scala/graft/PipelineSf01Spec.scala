@@ -47,14 +47,7 @@ class PipelineSf01Spec extends AnyFunSuite {
     // bound on a noise fixture
     val fed = p.currentDay.minusDays(LabelBuilder.horizonDays)
     val labels = LabelBuilder.labels(p.txc, p.commodities, fed)
-    val lookups = Seq(
-      TrainingSetBuilder.Lookup(p.householdFeatures.read(spark),
-        Seq("household_key"), "household__"),
-      TrainingSetBuilder.Lookup(p.commodityFeatures.read(spark),
-        Seq("commodity_desc"), "commodity__"),
-      TrainingSetBuilder.Lookup(p.householdCommodityFeatures.read(spark),
-        Seq("household_key", "commodity_desc"), "household_commodity__"))
-    val ts = TrainingSetBuilder.build(labels, lookups)
+    val ts = TrainingSetBuilder.build(labels, p.lookups)
     val desc = metrics.head._1
     val clean = p.commodities
       .filter(col("commodity_desc") === desc)

@@ -159,4 +159,21 @@ class TrainerSpec extends AnyFunSuite {
     assert(a1.agg(sum("id")).head().getLong(0) == a2.agg(sum("id")).head().getLong(0))
     assert(a1.count() + b1.count() + c1.count() == 100)
   }
+
+  test("lr trains and evaluates when the fitted split holds no positive") {
+    val cfg = PropensityTrainer.Config(algo = "lr", regParams = Seq(0.0), maxIter = 5,
+      parallelism = 1)
+    // one positive among 150 rows, placed where TrainValidationSplit's
+    // seeded 0.8/0.2 split (ordered by id within each partition) holds it
+    // out: the fitted part sees negatives only
+    val negatives = toy(150).withColumn("purchased", lit(0))
+    val heldOut = negatives.randomSplit(Array(0.8, 0.2), cfg.seed)(1)
+      .select("id").head().getLong(0)
+    val df = PropensityTrainer.withWeights(
+      negatives.withColumn("purchased", when(col("id") === heldOut, 1).otherwise(0)), 1.0 / 150)
+    val model = PropensityTrainer.train(df, Seq("household__f1", "household__f2"), cfg)
+    val m = PropensityTrainer.evaluate(model, df)
+    assert(!m.balancedAccuracy.isNaN && !m.mcc.isNaN, s"metrics: $m")
+    assert(model.transform(df).count() == 150)
+  }
 }
