@@ -240,7 +240,8 @@ object Bench {
       kept = kept.drop(1)
       line = render(kept, byTime.size - kept.size)
     }
-    println(line)
+    // stop first: Spark's shutdown output cannot land after the line
     spark.stop()
+    println(line)
   }
 }

@@ -16,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   *    commodity_desc) — the conservative default would re-shuffle both
   *    sides on the full key set. Safe here: the subset key is the
   *    well-distributed bucket key.
+  *
+  * Not set here: the RangePrefix pid mode (ops/RangePrefix.scala) keeps
+  * its localCheckpoint-pin default; a deployment that must survive
+  * executor loss passes `--conf spark.graft.rangePrefix.deterministic=true`.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -62,21 +66,8 @@ object GraftSession {
       // Tungsten page size: the computed default at 24g/32-threads is a
       // 32 MiB page — a G1 "humongous" allocation at this heap's 16 MiB
       // region size, so every wide-aggregation hash map churns the old
-      // gen directly. 4 MiB pages are region-friendly; SPARK_GRAFT_PAGE
-      // overrides for experiments.
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_PAGE", "4m"))
-      // RangePrefix pid mode (ops/RangePrefix.scala): default keeps the
-      // localCheckpoint pin; "true" switches every prefix consumer to the
-      // deterministic literal-boundary bucketing (executor-loss-safe) —
-      // env-switchable so Verify can hash-prove both modes on one build.
-      .config("spark.graft.rangePrefix.deterministic",
-        sys.env.getOrElse("SPARK_GRAFT_DETERMINISTIC_PREFIX", "false"))
-      // FeatureBuilder two-stage day fusion (r10): default on; "false"
-      // restores the single-pass wide aggregate — env-switchable so
-      // Verify/Bench can hash-prove and A/B both shapes on one build.
-      .config("spark.graft.features.dayFusion",
-        sys.env.getOrElse("SPARK_GRAFT_DAY_FUSION", "true"))
+      // gen directly. 4 MiB pages are region-friendly.
+      .config("spark.buffer.pageSize", "4m")
 
   /** Unpersist every persistent RDD not in `pinned` — the harness sweep
     * for transient per-query blocks (localCheckpoint/cache blocks are only

@@ -12,21 +12,23 @@ import MetricDefs.AggKind
   *
   * Reference shape: per window → filter → groupBy → ~100 `withColumn`s →
   * suffix-rename → 4-way left-join chain onto a spine → fillna.
-  * Engine shape: grouped aggregates whose aggregate list carries the
-  * window condition inside every aggregate (all 4 windows at once), then
-  * one cleanup projection (cast DOUBLE + fill 0.0, `04a:556-558`/`04a:595`
-  * semantics) and one ratio projection.
+  * Engine shape: a (keys, day) pre-aggregate, then grouped aggregates
+  * whose aggregate list carries the window condition inside every
+  * aggregate (all 4 windows at once), cleaned in place (cast DOUBLE +
+  * fill 0.0, `04a:556-558`/`04a:595` semantics), then one ratio
+  * projection.
   *
   * Exact distinct counts (the ~48 `COUNT(DISTINCT CASE WHEN …)` aggregates)
   * are NOT computed in that same pass: Catalyst's
   * `RewriteDistinctAggregates` would Expand the input once per distinct
   * group (~13×) through the shuffle — the SURVEY §4 hotspot, and a
-  * scale-killer at 100 TB. Instead the builder splits them per distinct
-  * ENTITY (day / basket_id / product_id): for each entity it
+  * scale-killer at 100 TB. Day distincts are plain counts over the
+  * (keys, day) pre-aggregate. The rest split per distinct ENTITY
+  * (basket_id / product_id): for each entity the builder
   * pre-aggregates boolean "seen under condition" indicators on
   * `(grain keys, entity)` — a plain, map-side-combinable aggregation over
   * pruned columns — then sums the indicators per grain key and joins the
-  * three small per-key results back onto the plain aggregates. Row
+  * small per-key results back onto the day-fused aggregates. Row
   * expansion: none. Shuffle volume: one pruned pass per entity with
   * map-side dedup, instead of a 13×-expanded full pass.
   *
@@ -71,13 +73,12 @@ object FeatureBuilder {
     * grains over two facts — one bounds job each, not one per grain).
     */
   def build(fact: DataFrame, grain: Grain,
-      approxDistinct: Boolean = false,
       knownBounds: Option[(LocalDate, LocalDate)] = None,
       referenceExact: Boolean = false): DataFrame = {
     val (_, cur) = knownBounds.getOrElse(bounds(fact))
     val wins = WindowSpec.windows(cur)
     val aggs = wins.flatMap(w =>
-      MetricDefs.aggsFor(w, approxDistinct, referenceExact, precomputed = true))
+      MetricDefs.aggsFor(w, referenceExact, precomputed = true))
     val posts = wins.flatMap(MetricDefs.ratiosFor)
 
     // Pre-filter to the union of all windows: lets parquet skip row groups
@@ -85,11 +86,16 @@ object FeatureBuilder {
     // grain keys are excluded EXPLICITLY (and identically in the oracle's
     // pref CTE): the grains are defined over non-null keys — reference
     // behavior, since its spine join-back on the grouping keys
-    // (`04a:548-552`) never matches null keys either — and making it a
-    // filter keeps the exact split-distinct path (whose joins use
-    // null-rejecting equality) consistent with the approx single-pass.
+    // (`04a:548-552`) never matches null keys either — and the split
+    // distinct passes join with null-rejecting equality.
     val oldest = wins.map(_.start).min(Ordering.by((d: LocalDate) => d.toEpochDay))
     val keyCols = grain.keys.map(col)
+    // one window-membership boolean per window; a def, so each frame that
+    // carries the flags gets its own fresh aliases
+    def winFlags: Seq[Column] = wins.map(w =>
+      col("day").between(
+        lit(java.sql.Date.valueOf(w.start)), lit(java.sql.Date.valueOf(w.end)))
+        .as(MetricDefs.winFlagCol(w)))
     // Hoist every expression the ~430 aggregates share into ONE physical
     // column each (the `precomputed = true` contract of
     // MetricDefs.aggsFor): 4 window-membership booleans, 4 flag
@@ -98,10 +104,7 @@ object FeatureBuilder {
     // the DOUBLE→DECIMAL cast in particular allocates per evaluation and
     // previously ran at 24 cast sites per row (4 windows × 6 metrics).
     val pre =
-      WindowSpec.windows(cur).map(w =>
-        col("day").between(
-          lit(java.sql.Date.valueOf(w.start)), lit(java.sql.Date.valueOf(w.end)))
-          .as(MetricDefs.winFlagCol(w))) ++
+      winFlags ++
       MetricDefs.flagMetrics.map(m =>
         (col(m) > 0.0).as(MetricDefs.posFlagCol(m))) ++
       MetricDefs.moneyMetrics.map(m =>
@@ -125,100 +128,55 @@ object FeatureBuilder {
     // HashAggregate emits clean doubles from its own (method-splittable)
     // span and the join chain carries only pass-through columns.
     def cleanDouble(c: Column): Column = coalesce(c.cast("double"), lit(0.0))
-    val agged =
-      if (approxDistinct) {
-        // HLL sketches are ordinary algebraic aggregates — one pass, no
-        // Expand, nothing to split.
-        val aggCols = aggs.map(a => cleanDouble(a.col).as(a.name))
-        prefiltered.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
-      } else if (!fact.sparkSession.conf
-          .getOption("spark.graft.features.dayFusion").forall(_.toBoolean)) {
-        // flag-off path (the pre-r10 single-pass shape, kept for A/B and
-        // for fixtures where (keys, day) does not compress below rows)
-        val plain = aggs.filter(_.kind == AggKind.Plain)
-        val dist = aggs.flatMap(a => a.kind match {
-          case d: AggKind.DistinctOf => Some((a, d))
-          case AggKind.Plain => None
-        })
-        val plainCols = plain.map(a => cleanDouble(a.col).as(a.name))
-        val plainDf = prefiltered.groupBy(keyCols: _*)
-          .agg(plainCols.head, plainCols.tail: _*)
-        val entities = dist.map(_._2.entity).distinct
-        val entityCounts = entities.map { e =>
-          val forE = dist.filter(_._2.entity == e)
-          val indicators = forE.map { case (a, d) =>
-            max(when(d.cond && col(e).isNotNull, lit(1))).as(s"seen__${a.name}")
-          }
-          val pre = prefiltered.groupBy((keyCols :+ col(e)): _*)
-            .agg(indicators.head, indicators.tail: _*)
-          val counts = forE.map { case (a, _) =>
-            cleanDouble(sum(col(s"seen__${a.name}"))).as(a.name)
-          }
-          pre.groupBy(keyCols: _*).agg(counts.head, counts.tail: _*)
-        }
-        entityCounts.foldLeft(plainDf)((acc, df) => acc.join(df, grain.keys, "inner"))
-      } else {
-        val plain = aggs.filter(_.kind == AggKind.Plain)
-        val dist = aggs.flatMap(a => a.kind match {
-          case d: AggKind.DistinctOf => Some((a, d))
-          case AggKind.Plain => None
-        })
-        // Day fusion (MetricDefs.dayPartials scaladoc): every plain
-        // aggregate AND the day-entity distincts reduce exactly over a
-        // (keys, day) pre-aggregate, so the widest pass — ~88 conditional
-        // aggregates — runs over keys × horizon-days rows instead of fact
-        // rows, and the fact itself is scanned once less (the former
-        // standalone plain pass folds into the day pass). Stage 1 is ~21
-        // narrow, window-independent, map-combinable partials.
-        val partials = MetricDefs.dayPartials(referenceExact)
-        val dayKeyed = prefiltered
-          .groupBy((keyCols :+ col("day")): _*)
-          .agg(partials.head, partials.tail: _*)
-        val dayFlags = WindowSpec.windows(cur).map(w =>
-          col("day").between(
-            lit(java.sql.Date.valueOf(w.start)), lit(java.sql.Date.valueOf(w.end)))
-            .as(MetricDefs.winFlagCol(w)))
-        val dayFrame = dayKeyed.select(
-          dayKeyed.columns.map(col).toSeq ++ dayFlags: _*)
-        val fused = wins.flatMap(w =>
-          MetricDefs.fusedDayAggs(w, referenceExact))
-        // construction-time guard: the fused set must cover exactly the
-        // plain aggregates plus the day-entity distincts of aggsFor —
-        // a metric added to one renderer but not the other fails fast
-        // here, not as a silent column drift
-        require(fused.map(_.name).toSet ==
-          (plain.map(_.name) ++
-            dist.filter(_._2.entity == "day").map(_._1.name)).toSet,
-          "FeatureBuilder: fusedDayAggs out of sync with aggsFor")
-        val fusedCols = fused.map(a => cleanDouble(a.col).as(a.name))
-        val plainDf = dayFrame.groupBy(keyCols: _*)
-          .agg(fusedCols.head, fusedCols.tail: _*)
 
-        val entities = dist.map(_._2.entity).distinct.filter(_ != "day")
-        val entityCounts = entities.map { e =>
-          val forE = dist.filter(_._2.entity == e)
-          // stage 1: per (keys, entity) — has any row satisfied each
-          // window/flag condition? Null entities are excluded, matching
-          // COUNT(DISTINCT CASE …)'s null-skipping.
-          val indicators = forE.map { case (a, d) =>
-            max(when(d.cond && col(e).isNotNull, lit(1))).as(s"seen__${a.name}")
-          }
-          val pre = prefiltered.groupBy((keyCols :+ col(e)): _*)
-            .agg(indicators.head, indicators.tail: _*)
-          // stage 2: per keys — count the entities seen under each
-          // condition (sum of 0/1 indicators ≡ exact distinct count).
-          val counts = forE.map { case (a, _) =>
-            cleanDouble(sum(col(s"seen__${a.name}"))).as(a.name)
-          }
-          pre.groupBy(keyCols: _*).agg(counts.head, counts.tail: _*)
-        }
-        // Same fact, same grouping → identical key sets on every side;
-        // the using-join resolves by name, so self-lineage is fine.
-        entityCounts.foldLeft(plainDf)((acc, df) => acc.join(df, grain.keys, "inner"))
+    // Day fusion (MetricDefs.dayPartials scaladoc): every plain
+    // aggregate AND the day-entity distincts reduce exactly over a
+    // (keys, day) pre-aggregate, so the widest pass — ~88 conditional
+    // aggregates — runs over keys × horizon-days rows instead of fact
+    // rows. Stage 1 is ~21 narrow, window-independent, map-combinable
+    // partials. Measured against the single-pass wide aggregate on the
+    // daily_score benchmark: 19.5 s vs 25.3 s of feature-build job wall,
+    // 22 vs 25 jobs (6 of 6 paired runs).
+    val partials = MetricDefs.dayPartials(referenceExact)
+    val dayKeyed = prefiltered
+      .groupBy((keyCols :+ col("day")): _*)
+      .agg(partials.head, partials.tail: _*)
+    val dayFrame = dayKeyed.select(dayKeyed.columns.map(col).toSeq ++ winFlags: _*)
+    val fusedCols = wins.flatMap(w => MetricDefs.fusedDayAggs(w, referenceExact))
+      .map(a => cleanDouble(a.col).as(a.name))
+    val dayDf = dayFrame.groupBy(keyCols: _*)
+      .agg(fusedCols.head, fusedCols.tail: _*)
+
+    // The basket/product exact distincts cannot reduce by day (an entity
+    // may span days). Per entity — stage 1: per (keys, entity), has any
+    // row satisfied each window/flag condition? Null entities are
+    // excluded, matching COUNT(DISTINCT CASE …)'s null-skipping. Stage 2:
+    // per keys, count the entities seen under each condition (sum of 0/1
+    // indicators ≡ exact distinct count).
+    val dist = aggs.flatMap(a => a.kind match {
+      case d: AggKind.DistinctOf if d.entity != "day" => Some((a, d))
+      case _ => None
+    })
+    val entityCounts = dist.map(_._2.entity).distinct.map { e =>
+      val forE = dist.filter(_._2.entity == e)
+      val indicators = forE.map { case (a, d) =>
+        max(when(d.cond && col(e).isNotNull, lit(1))).as(s"seen__${a.name}")
       }
+      val seen = prefiltered.groupBy((keyCols :+ col(e)): _*)
+        .agg(indicators.head, indicators.tail: _*)
+      val counts = forE.map { case (a, _) =>
+        cleanDouble(sum(col(s"seen__${a.name}"))).as(a.name)
+      }
+      seen.groupBy(keyCols: _*).agg(counts.head, counts.tail: _*)
+    }
+    // Same fact, same grouping → identical key sets on every side; the
+    // using-join resolves by name, so self-lineage is fine.
+    val agged =
+      entityCounts.foldLeft(dayDf)((acc, df) => acc.join(df, grain.keys, "inner"))
 
     // canonical metric order after the joins (pass-through projection; the
-    // DOUBLE cast + 0.0 fill happened inside each aggregate above)
+    // DOUBLE cast + 0.0 fill happened inside each aggregate above). A
+    // metric missing from every pass fails here, at construction.
     val cleaned = agged.select(keyCols ++ aggs.map(a => col(a.name)): _*)
 
     cleaned.select(

@@ -63,12 +63,6 @@ object MetricDefs {
 
   private def dlit(d: LocalDate): Column = lit(Date.valueOf(d))
 
-  /** All aggregates for one window, computed over a shared grouped pass:
-    * the window filter is folded into every aggregate (`when(inWin, …)`)
-    * instead of the reference's filter-then-aggregate-then-join-4-windows
-    * chain — one logical aggregation for all windows (scale redesign,
-    * SURVEY.md §4).
-    */
   /** Names of the precomputed per-row helper columns the builder's
     * pre-projection adds when `precomputed = true` (see
     * [[graft.features.FeatureBuilder.build]]): one boolean per window,
@@ -82,15 +76,14 @@ object MetricDefs {
   def posFlagCol(m: String): String = s"__pos_$m"
   def decCol(m: String): String = s"__dec_$m"
 
-  def aggsFor(w: WindowDef, approxDistinct: Boolean = false,
-      referenceExact: Boolean = false,
+  /** All aggregates for one window, computed over a shared grouped pass:
+    * the window filter is folded into every aggregate (`when(inWin, …)`)
+    * instead of the reference's filter-then-aggregate-then-join-4-windows
+    * chain — one logical aggregation for all windows (scale redesign,
+    * SURVEY.md §4).
+    */
+  def aggsFor(w: WindowDef, referenceExact: Boolean = false,
       precomputed: Boolean = false): Seq[AggDef] = {
-    // the approx variant swaps exact distinct counts for HLL sketches —
-    // the 100 TB escape hatch that keeps everything in ONE pass with no
-    // Expand and no per-entity restructuring; not oracle-exact, so only
-    // non-oracle callers set it
-    def cdist(c: Column) =
-      if (approxDistinct) approx_count_distinct(c) else countDistinct(c)
     val inWin =
       if (precomputed) col(winFlagCol(w))
       else col("day").between(dlit(w.start), dlit(w.end))
@@ -120,14 +113,14 @@ object MetricDefs {
         AggDef(s"products_$s", count(when(inWin, col("product_id"))),
           s"COUNT(CASE WHEN $inWinSql THEN product_id END)")
       else
-        AggDef(s"products_$s", cdist(when(inWin, col("product_id"))),
+        AggDef(s"products_$s", countDistinct(when(inWin, col("product_id"))),
           s"COUNT(DISTINCT CASE WHEN $inWinSql THEN product_id END)",
           distinctOf("product_id", None))
     val base = Seq(
-      AggDef(s"days_$s", cdist(when(inWin, col("day"))),
+      AggDef(s"days_$s", countDistinct(when(inWin, col("day"))),
         s"COUNT(DISTINCT CASE WHEN $inWinSql THEN day END)",
         distinctOf("day", None)),
-      AggDef(s"baskets_$s", cdist(when(inWin, col("basket_id"))),
+      AggDef(s"baskets_$s", countDistinct(when(inWin, col("basket_id"))),
         s"COUNT(DISTINCT CASE WHEN $inWinSql THEN basket_id END)",
         distinctOf("basket_id", None)),
       productsAgg,
@@ -149,7 +142,7 @@ object MetricDefs {
       Seq("day" -> "days", "basket_id" -> "baskets", "product_id" -> "products")
         .map { case (k, kn) =>
           AggDef(s"${kn}_with_${m}_$s",
-            cdist(when(inWin && pos(m), col(k))),
+            countDistinct(when(inWin && pos(m), col(k))),
             s"COUNT(DISTINCT CASE WHEN $inWinSql AND $m > 0.0 THEN $k END)",
             distinctOf(k, Some(m)))
         }
@@ -227,8 +220,8 @@ object MetricDefs {
     * Only the basket/product exact-distinct families cannot reduce by
     * day (an entity may span days) — they keep their per-entity split
     * passes. The oracle SQL is untouched: names and SQL render from the
-    * SAME [[aggsFor]] list, and [[graft.features.FeatureBuilder.build]]
-    * cross-checks name sets at construction time.
+    * SAME [[aggsFor]] list; FeatureSpec pins every fused column against
+    * the [[aggsFor]] single-pass reference.
     */
   def dayPartials(referenceExact: Boolean): Seq[Column] = {
     val base = Seq(
@@ -291,9 +284,9 @@ object MetricDefs {
     base ++ money ++ condDistinctDay ++ condCount ++ daysSince
   }
 
-  /** Null-safe ratio shared by both renderers. The reference's plain
-    * divisions null out on 0 denominators and are fillna'd to 0.0
-    * downstream (`04a:595`); folding the guard in here gives the same
+  /** Null-safe ratio, one definition for the builder and the oracle SQL.
+    * The reference's plain divisions null out on 0 denominators and are
+    * fillna'd to 0.0 downstream (`04a:595`); folding the guard in here gives the same
     * value in one step. 9-dp-quantized on BOTH engines (the suite-wide
     * computed-double convention): the division inputs are exact
     * (decimal sums / counts) so a single IEEE divide is bit-stable, but

@@ -110,7 +110,8 @@ object ExactPercentiles {
     * [cum − w, cum − 1] under the value order, so the floor/ceil order
     * statistics at rank (n−1)·p are the same doubles, and the
     * interpolation arithmetic is unchanged. Groups whose values are all
-    * null (i.e. absent from the domain table) are dropped, as in
+    * null (i.e. absent from the domain table) or whose weights are all
+    * zero or null hold no original row and are dropped, as in
     * [[perGroup]]. Caller contract: (group, value) rows are UNIQUE —
     * duplicates would make the cumulative ranks partitioning-dependent.
     */
@@ -124,7 +125,8 @@ object ExactPercentiles {
         s"perGroupWeighted: $nm fraction $p outside [0,1]")
     }
     val gs = groupCols.map(col)
-    val base = df.filter(col(valueCol).isNotNull)
+    val base = df
+      .filter(col(valueCol).isNotNull && col(weightCol).cast("long") > 0L)
       .select(gs ++ Seq(col(valueCol).cast("double").as("__v"),
         col(weightCol).cast("long").as("__w")): _*)
     val byGroup = Window.partitionBy(gs: _*).orderBy(col("__v"))

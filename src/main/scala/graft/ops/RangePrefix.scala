@@ -63,9 +63,9 @@ object RangePrefix {
     * reintroduce the exact corruption this pin exists to kill. A
     * deployment needing executor-loss survival should set a reliable
     * `spark.checkpoint.dir` and swap `.localCheckpoint(true)` for
-    * `.checkpoint(true)` — or set `spark.graft.rangePrefix.deterministic`
-    * to `true` and take the [[deterministicBucketed]] path below, which
-    * removes the pin entirely.
+    * `.checkpoint(true)` — or pass
+    * `--conf spark.graft.rangePrefix.deterministic=true` and take the
+    * [[deterministicBucketed]] path below, which removes the pin entirely.
     */
   private def pinnedRangePartition(df: DataFrame,
       keys: Seq[Column]): DataFrame =

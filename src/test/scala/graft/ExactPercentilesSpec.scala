@@ -75,7 +75,9 @@ class ExactPercentilesSpec extends AnyFunSuite {
   }
 
   test("perGroupWeighted: single-value domain and null values") {
-    val domain = Seq(("a", Some(5.0), 9L), ("b", None, 3L))
+    // b (all-null values) and z (all-zero weights) hold no ranked row:
+    // both drop, as they would from perGroup over the expanded rows
+    val domain = Seq(("a", Some(5.0), 9L), ("b", None, 3L), ("z", Some(3.0), 0L))
       .toDF("grp", "v", "w")
     val out = ExactPercentiles.perGroupWeighted(domain, Seq("grp"), "v", "w",
       Seq("p0" -> 0.0, "p50" -> 0.5, "p100" -> 1.0)).collect()

@@ -117,8 +117,10 @@ class FeatureSpec extends AnyFunSuite {
   test("split-distinct path is value-identical to the naive single-pass") {
     // randomized facts (seeded): days spread across all four windows
     // (incl. the 1yr same-season slice), flags randomly zero/positive,
-    // null product_ids to exercise COUNT(DISTINCT)'s null-skipping
-    for (seed <- Seq(11, 42, 99)) {
+    // null product_ids to exercise COUNT(DISTINCT)'s null-skipping; both
+    // `products` renderings (distinct default, plain referenceExact), so
+    // every day-fused column is pinned to its aggsFor definition
+    for (referenceExact <- Seq(false, true); seed <- Seq(11, 42, 99)) {
       val rnd = new scala.util.Random(seed)
       val dayPool = (0 to 95).map(cur.minusDays(_)) ++ (330 to 400).map(cur.minusDays(_))
       val rows = (0 until 60).map { i =>
@@ -138,11 +140,12 @@ class FeatureSpec extends AnyFunSuite {
       // pin cur so both sides derive identical windows regardless of the
       // random max day
       val split = FeatureBuilder.build(f, FeatureBuilder.household,
-        knownBounds = Some((cur.minusDays(400), cur)))
+        knownBounds = Some((cur.minusDays(400), cur)),
+        referenceExact = referenceExact)
       // naive: ONE groupBy carrying the exact countDistinct aggregates
       // (Catalyst's Expand path), then the same clean + ratio projections
       val wins = WindowSpec.windows(cur)
-      val aggs = wins.flatMap(w => MetricDefs.aggsFor(w))
+      val aggs = wins.flatMap(w => MetricDefs.aggsFor(w, referenceExact))
       val posts = wins.flatMap(MetricDefs.ratiosFor)
       // same union-of-windows prefilter the builder applies
       val fPref = f.filter(col("day").between(
@@ -160,7 +163,8 @@ class FeatureSpec extends AnyFunSuite {
       def dump(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getAs[Long]("household_key") ->
           (1 until r.length).map(r.getDouble)).toMap
-      assert(dump(split) == dump(naive), s"seed $seed diverged")
+      assert(dump(split) == dump(naive),
+        s"seed $seed (referenceExact=$referenceExact) diverged")
     }
   }
 
@@ -187,22 +191,6 @@ class FeatureSpec extends AnyFunSuite {
     // the rest of the catalog is untouched
     assert(dflt.getAs[Double]("baskets_30d") == refx.getAs[Double]("baskets_30d"))
     assert(dflt.getAs[Double]("amount_paid_30d") == refx.getAs[Double]("amount_paid_30d"))
-  }
-
-  test("approxDistinct flag swaps exact distincts for HLL sketches") {
-    val exact = FeatureBuilder.build(fact, FeatureBuilder.household)
-    val approx = FeatureBuilder.build(fact, FeatureBuilder.household,
-      approxDistinct = true)
-    assert(approx.columns.toSeq == exact.columns.toSeq)
-    // tiny groups: HLL is exact there, so values agree while the plan
-    // stays single-pass with no Expand
-    val e = exact.collect().map(r => r.getAs[Long]("household_key") ->
-      r.getAs[Double]("baskets_60d")).toMap
-    val a = approx.collect().map(r => r.getAs[Long]("household_key") ->
-      r.getAs[Double]("baskets_60d")).toMap
-    assert(a == e)
-    val plan = approx.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("Expand"), "approx path must not Expand")
   }
 
   test("all metric columns are DOUBLE and null-free") {
