@@ -11,37 +11,19 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dev-only selector for scale studies (the driver sets no env → full
+    // suite): time (and warm) only the named queries
+    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(only => Harness.select(only.split(",").map(_.trim)))
+      .getOrElse(SparkEntry.queries).toSeq.sortBy(_._1)
+    val spark = Harness.session()
 
     // warm-up: list + scan every fixture table once (cheap count)
     graft.core.Catalog.fixtureTables.foreach { t =>
       try { spark.read.parquet(s"$sfDir/$t.parquet").count() }
       catch { case _: Throwable => () }
     }
-    // S11 setup: the reference registers its tables once at ingest
-    // (01_Data_Prep.py:93-100); the per-query timer should measure the
-    // query, not catalog registration. A missing fixture table must not
-    // abort the bench before the JSON line: registerAll is per-table
-    // fault-isolated (healthy tables register even when one is bad), so
-    // only queries over the bad table report -1.
-    try graft.core.Catalog.registerAll(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] catalog warm-up failed: $e")
-    }
-    // Materialize the silver fact ONCE (bucketed by household_key +
-    // pinned), mirroring the reference where transactions_adj is a
-    // physical CTAS table built by ingest, not re-derived per query.
-    graft.core.SilverStore.enable()
-    // A failed materialization is NOT cached, so every timed query would
-    // silently re-attempt the bucketed write inside its timed region —
-    // log it loudly instead of swallowing it.
-    try graft.silver.TransactionsAdj(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] silver warm-up failed: $e")
-    }
+    Harness.prepare(spark, sfDir, "bench")
     // ML warm-up: the first MLlib use in the JVM pays one-time class-load
     // and JIT of the fit path (measured ~2.4s at sf0.1, attributed to
     // whichever ANN query runs first). A 16-vector k-means here moves that
@@ -75,24 +57,15 @@ object Bench {
     // generated loops at C1 — measured totals 63.5s (sf0.001 warm) vs
     // 51.1s (sf0.01 warm) with the same timed fixture. Needs the code
     // cache sized for two suite passes (build.sbt ReservedCodeCacheSize).
-    // dev-only selector for scale studies (the driver sets no env →
-    // full suite): time (and warm) only the named queries
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
     if (warmDir.nonEmpty && warmDir != sfDir &&
         new java.io.File(warmDir).isDirectory) {
       // blocks pinned so far (the timed fixture's silver) must survive
       // the sweep; everything the sweep itself pins is dropped after
       val preSweep = spark.sparkContext.getPersistentRDDs.keySet
-      try graft.core.Catalog.registerAll(spark, warmDir)
-      catch { case e: Throwable => System.err.println(s"[bench] warm catalog: $e") }
-      try graft.silver.TransactionsAdj(spark, warmDir)
-      catch { case e: Throwable => System.err.println(s"[bench] warm silver: $e") }
+      Harness.prepare(spark, warmDir, "bench warm")
       val t0 = System.nanoTime()
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .foreach { case (name, fn) =>
+      names.foreach { case (name, fn) =>
         try { fn(spark, warmDir).queryExecution.toRdd.count(); () }
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm $name failed: $e")
@@ -100,10 +73,10 @@ object Bench {
       }
       System.err.println(
         f"[bench] suite warm-up at $warmDir: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      graft.core.GraftSession.sweepTransientBlocks(spark, preSweep)
-      // the sweep re-pointed the temp views at the toy fixture — restore
-      try graft.core.Catalog.registerAll(spark, sfDir)
-      catch { case e: Throwable => System.err.println(s"[bench] catalog: $e") }
+      Harness.sweep(spark, preSweep)
+      // the warm-up re-pointed the temp views at the toy fixture — restore
+      // (the timed fixture's silver is already pinned)
+      Harness.prepare(spark, sfDir, "bench")
     }
 
     def gcMillis: Long = {
@@ -112,36 +85,8 @@ object Bench {
         .asScala.map(_.getCollectionTime).sum
     }
     // RDD blocks pinned at warm-up end (the bucketed silver) stay for the
-    // whole run; everything else is query-transient. A query's
-    // localCheckpoint / cache blocks are only released when the DRIVER GCs
-    // the RDD object (ContextCleaner is weak-ref driven), which a 24g heap
-    // may not do for minutes — so without an explicit sweep, transient
-    // blocks from 57 queries accumulate in the storage half of unified
-    // memory and later wide aggregations spill. Sweep = unpersist every
-    // persistent RDD that did not exist at warm-up end.
+    // whole run; everything else is query-transient (see Harness.sweep)
     val pinnedRdds = spark.sparkContext.getPersistentRDDs.keySet
-    // Storage-pressure-gated drain (r9 VERDICT ask #4): unpersist covers
-    // RDD blocks, but BROADCAST blocks (task binaries, broadcast joins)
-    // are only reclaimed when the ContextCleaner sees their driver
-    // objects garbage-collected — at 100× scale a long one-JVM suite
-    // accumulated enough of them that the block manager spilled and two
-    // heavy queries died. When >25% of storage memory is occupied after
-    // the sweep, force one GC so the cleaner can reap; at sf0.1 the gate
-    // almost never fires (storage stays near-empty), so the driver's
-    // timed protocol is unaffected.
-    def drainIfPressured(): Unit = {
-      val status = spark.sparkContext.getExecutorMemoryStatus.values
-      val maxMem = status.map(_._1).sum
-      val used = status.map { case (mx, rem) => mx - rem }.sum
-      if (maxMem > 0 && used > maxMem / 4) {
-        System.gc()
-        Thread.sleep(100) // let the async ContextCleaner issue removals
-      }
-    }
-    def sweepTransientBlocks(): Unit = {
-      graft.core.GraftSession.sweepTransientBlocks(spark, pinnedRdds)
-      drainIfPressured()
-    }
 
     // Per-query seconds are the MIN over `timedPasses` full passes of the
     // suite (default 2, SPARK_GRAFT_TIMED_PASSES=1 restores single-pass).
@@ -152,8 +97,6 @@ object Bench {
     // passes measures the query; a single sample measures the host's
     // mood. Per-pass times go to stderr; the JSON line reports the min.
     val timedPasses = sys.env.getOrElse("SPARK_GRAFT_TIMED_PASSES", "2").toInt
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // failure REASON (exception class) rides into the JSON errors array —
     // round-9 lesson: a driver-side run drops stderr, and a bare name in
     // `errors` made the 100× in-suite failures undiagnosable after the fact
@@ -179,7 +122,7 @@ object Bench {
             false
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        sweepTransientBlocks()
+        Harness.sweep(spark, pinnedRdds)
         // stderr diagnostic (the stdout contract stays one JSON line):
         // how much of each query's wall time was driver/executor GC — the
         // wide feature plans are the usual suspect when a bench time

@@ -8,11 +8,13 @@ package graft
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ExplainQuery <queryName> [more...]")
-    val DevHarness.Ctx(spark, sfDir) = DevHarness.init("explain")
+    val queries = Harness.select(args)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Harness.session()
+    Harness.prepare(spark, sfDir, "explain")
     args.foreach { name =>
-      val fn = DevHarness.query(name)
       println(s"===== $name =====")
-      val qe = fn(spark, sfDir).queryExecution
+      val qe = queries(name)(spark, sfDir).queryExecution
       // execute first: under AQE the codegen-wrapped, finalized stages only
       // exist after the run (isFinalPlan=true)
       qe.toRdd.count()

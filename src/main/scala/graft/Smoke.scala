@@ -3,8 +3,7 @@ package graft
   * count (driver checks rows>0 on sf0.001). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.builder("local[8]", 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()} COLS=${df.columns.mkString(",")}")
     spark.stop()

@@ -29,20 +29,12 @@ object Verify {
     // dev-only selector (the driver always passes 2 args): restrict the
     // dump — and the emitted oracle json — to the named queries, or with
     // `--fast` skip the pinned heaviest set
-    val selected: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] =
+    val selected: Map[String, Harness.Query] =
       if (args.length == 3 && args(2) == "--fast")
         SparkEntry.queries.view.filterKeys(!heavyQueries.contains(_)).toMap
-      else if (args.length == 3) {
-        val names = args(2).split(",").map(_.trim).toSet
-        val missing = names -- SparkEntry.queries.keySet
-        require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
-        SparkEntry.queries.view.filterKeys(names).toMap
-      } else SparkEntry.queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      else if (args.length == 3) Harness.select(args(2).split(",").map(_.trim))
+      else SparkEntry.queries
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -74,9 +66,10 @@ object Verify {
           (if (err.isEmpty) "}\n" else s""","error":${q(err)}}""" + "\n"),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
 
-    // one bucketed+pinned silver fact for the whole dump (values identical;
-    // see core.SilverStore)
-    graft.core.SilverStore.enable()
+    // registered catalog + one bucketed, pinned silver fact for the whole
+    // dump (values identical; see core.SilverStore) — the first Spark jobs,
+    // so they run after oracle_sql.json has landed
+    Harness.prepare(spark, sfDir, "verify")
     // self-record rows: (name, ok, rows, cols, sec) — the DuckDB-less
     // summary written at dump end (and incrementally), so even a round
     // whose driver artifact truncates to `{}` leaves a machine-readable,

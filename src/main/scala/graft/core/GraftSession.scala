@@ -2,10 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE place the engine's session configuration lives — every harness
-  * main (Bench/Verify/Smoke) and the shared test session build from this,
-  * so their plans cannot silently drift (a conf added to three of four
-  * builders would make bench and verify measure different physical plans).
+/** The ONE place the engine's session configuration lives — the harness
+  * mains (Bench, Verify, ExplainQuery, Smoke, all through `graft.Harness`),
+  * the benchmark's session and the shared test session build from this,
+  * so their plans cannot silently drift (a conf added to one builder but
+  * not another would make bench and verify measure different physical
+  * plans).
   *
   * Confs:
   *  - UTC session timezone (oracle date/timestamp determinism),
@@ -68,16 +70,4 @@ object GraftSession {
       // region size, so every wide-aggregation hash map churns the old
       // gen directly. 4 MiB pages are region-friendly.
       .config("spark.buffer.pageSize", "4m")
-
-  /** Unpersist every persistent RDD not in `pinned` — the harness sweep
-    * for transient per-query blocks (localCheckpoint/cache blocks are only
-    * released when the driver GCs the RDD object, which a large heap may
-    * not do for minutes; see Bench). ONE definition so the bench, the
-    * dev timers, and any future harness sweep identically.
-    */
-  def sweepTransientBlocks(spark: SparkSession,
-      pinned: scala.collection.Set[Int]): Unit =
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinned.contains(id)) rdd.unpersist(blocking = false)
-    }
 }

@@ -14,11 +14,12 @@ import org.apache.spark.storage.StorageLevel
   * expensive exchange of the whole suite once per query — harmless at
   * sf0.001, dominant at 100 TB.
   *
-  * When enabled (the harness mains `Bench`/`Verify` do; library users opt
-  * in per session), the first request for a fixture dir materializes the
-  * silver projection once as a table BUCKETED BY `household_key` — the
-  * join/group key of every feature, label and training-set stage — and
-  * pins the bucketed scan in memory. Consequences:
+  * When enabled (`graft.Harness.prepare` does for every harness main;
+  * library users opt in per session), the first request for a fixture dir
+  * materializes the silver projection once as a table BUCKETED BY
+  * `household_key` — the join/group key of every feature, label and
+  * training-set stage — and pins the bucketed scan in memory.
+  * Consequences:
   *
   *   - the lineitem⋈orders join runs exactly once per (session, fixture);
   *   - `groupBy(household_key…)` / joins on household_key over silver

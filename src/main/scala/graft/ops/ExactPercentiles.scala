@@ -95,7 +95,7 @@ object ExactPercentiles {
   }
 
   /** Weighted percentiles over a PRE-AGGREGATED per-group value domain:
-    * `df` carries ONE row per (group, value) with `weightCol` = how many
+    * `df` carries (group, value) rows with `weightCol` = how many
     * original rows hold that value. For BOUNDED value domains (integer
     * day gaps, fixed price grids) this is the scale-right shape: the
     * caller collapses the fact to its value domain with one map-side-
@@ -109,11 +109,12 @@ object ExactPercentiles {
     * pinned): a domain row covers the 0-based rank interval
     * [cum − w, cum − 1] under the value order, so the floor/ceil order
     * statistics at rank (n−1)·p are the same doubles, and the
-    * interpolation arithmetic is unchanged. Groups whose values are all
-    * null (i.e. absent from the domain table) or whose weights are all
-    * zero or null hold no original row and are dropped, as in
-    * [[perGroup]]. Caller contract: (group, value) rows are UNIQUE —
-    * duplicates would make the cumulative ranks partitioning-dependent.
+    * interpolation arithmetic is unchanged. A (group, value) pair may
+    * repeat: the tied rows' intervals tile one contiguous range whatever
+    * their order, so they rank as one row with the summed weight. Groups
+    * whose values are all null (i.e. absent from the domain table) or
+    * whose weights are all zero or null hold no original row and are
+    * dropped, as in [[perGroup]].
     */
   def perGroupWeighted(df: DataFrame, groupCols: Seq[String],
       valueCol: String, weightCol: String,
@@ -139,8 +140,8 @@ object ExactPercentiles {
 
     def pos(p: Double): Column = (col("__n") - 1L).cast("double") * lit(p)
 
-    // the domain row whose rank interval [cum − w, cum − 1] contains the
-    // floor/ceil target rank — exactly one matches per group
+    // the domain rows whose rank interval [cum − w, cum − 1] contains the
+    // floor/ceil target rank — one row, or tied rows sharing one value
     val picks = percentiles.flatMap { case (nm, p) =>
       def covers(target: Column): Column =
         col("__cum") - col("__w") <= target && target <= col("__cum") - 1L

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * (The reference has no analogue — it splits with seeded `randomSplit`,
   * `04b:366-367`, which is partition-count-dependent; this operator is
-  * the scale-correct replacement and what the engine's own
-  * `PropensityTrainer.split` callers can opt into for reproducibility.)
+  * the scale-correct replacement. The engine's own `PropensityTrainer.split`
+  * still calls `randomSplit`: no trainer path splits by key yet.)
   */
 object HashSplit {
 

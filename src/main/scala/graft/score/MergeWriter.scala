@@ -16,10 +16,9 @@ import graft.features.FeatureTable
   * minus the transaction log (see `mergeWide` for the NULL-update nuance);
   * atomicity comes from FeatureTable's staged directory swap.
   *
-  * Scale: the join shuffles on household_key once per commodity batch. The
-  * 100 TB refinement is to group all commodities of a scoring day into one
-  * wide source (computed here by `pivotScores`) so the table rewrites once
-  * per day, not once per commodity.
+  * Scale: all commodities of a scoring day arrive as one wide source
+  * (`pivotScores`), so `mergeWide` shuffles on the key and rewrites the
+  * table once per day, not once per commodity.
   */
 object MergeWriter {
 
@@ -32,9 +31,8 @@ object MergeWriter {
       .pivot("commodity_desc", commodities)
       .agg(first(col("prediction")))
 
-  /** Merge a WIDE (already-pivoted) score batch into the table — the
-    * 100 TB shape promised above: one full-outer join + one rewrite per
-    * scoring day for ALL commodities, instead of one per commodity.
+  /** Merge a WIDE (already-pivoted) score batch into the table: one
+    * full-outer join + one rewrite per scoring day for ALL commodities.
     * Matched keys take the incoming score per overlapping column via
     * `coalesce(src, target)` — a MERGE-PATCH: an incoming NULL means
     * "no score this run, keep the previous one", matching the reference's
@@ -59,23 +57,4 @@ object MergeWriter {
     table.overwrite(merged)
   }
 
-  /** Merge one commodity column into the pivoted table (S7). */
-  def mergeColumn(spark: SparkSession, table: FeatureTable,
-      scores: DataFrame, columnName: String): Unit = {
-    val src = scores.select(
-      col("household_key"), col("day"),
-      col("prediction").as(columnName))
-    if (!table.exists) { table.overwrite(src); return }
-    val target = table.read(spark)
-    val joined = target.as("t").join(src.as("s"), table.keys, "full_outer")
-    val untouched = target.columns.toSeq
-      .filterNot(table.keys.contains).filterNot(_ == columnName)
-    val merged = joined.select(
-      table.keys.map(col) ++
-        untouched.map(c => col(s"t.$c").as(c)) ++
-        Seq((if (target.columns.contains(columnName))
-               coalesce(col(s"s.$columnName"), col(s"t.$columnName"))
-             else col(s"s.$columnName")).as(columnName)): _*)
-    table.overwrite(merged)
-  }
 }

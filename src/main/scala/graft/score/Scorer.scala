@@ -17,7 +17,10 @@ import org.apache.spark.sql.functions._
 object Scorer {
 
   /** Score one commodity's spine; returns (household_key, day,
-    * commodity_desc, prediction).
+    * commodity_desc, prediction). The same model scores a feature stream
+    * (`readStream` source → append sink) row by row, with no watermark:
+    * the assembler and the classifier's transform hold no aggregation
+    * state.
     */
   def score(model: PipelineModel, spine: DataFrame): DataFrame =
     model.transform(spine)
@@ -38,15 +41,4 @@ object Scorer {
     inputs.flatten.distinct
   }
 
-  /** Streaming twin of [[score]] (SURVEY.md §2.9 extension): the SAME
-    * PipelineModel serves a feature stream — `readStream` source →
-    * `transform` → append sink. VectorAssembler and the classifier's
-    * transform are row-local (no aggregation state), so the streaming
-    * plan needs no watermark and scores ride each micro-batch; stream and
-    * batch scores are identical by construction (StreamingSpec asserts
-    * it). At scale this is the online-inference path: the model broadcast
-    * rides the executors, throughput is source-bound.
-    */
-  def scoreStream(model: PipelineModel, featureStream: DataFrame): DataFrame =
-    score(model, featureStream)
 }

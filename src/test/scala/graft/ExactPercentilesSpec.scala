@@ -67,11 +67,20 @@ class ExactPercentilesSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
     val domain = df.groupBy("grp", "v").agg(count(lit(1)).as("w"))
-    val weighted = ExactPercentiles.perGroupWeighted(
-      domain, Seq("grp"), "v", "w", ps)
-      .collect().map(r => r.getString(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(weighted == expanded)
+    def weighted(d: org.apache.spark.sql.DataFrame) =
+      ExactPercentiles.perGroupWeighted(d, Seq("grp"), "v", "w", ps)
+        .collect().map(r => r.getString(0) ->
+          (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    // the same domain with duplicated (group, value) rows: every weight
+    // w ≥ 2 split into rows of 1 and w − 1, shuffled so the tied rows
+    // reach the ranking window in any order
+    val duplicated = domain.filter(col("w") >= 2).withColumn("w", lit(1L))
+      .unionByName(domain.withColumn("w",
+        when(col("w") >= 2, col("w") - 1L).otherwise(col("w"))))
+      .repartition(7)
+    assert(duplicated.count() > domain.count())
+    assert(weighted(domain) == expanded)
+    assert(weighted(duplicated) == expanded)
   }
 
   test("perGroupWeighted: single-value domain and null values") {

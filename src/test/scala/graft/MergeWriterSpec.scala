@@ -11,16 +11,19 @@ class MergeWriterSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def d(s: String) = java.sql.Date.valueOf(s)
+  // one commodity's scores as the one-column wide batch mergeWide takes
+  private def asColumn(scores: org.apache.spark.sql.DataFrame, name: String) =
+    scores.select(col("household_key"), col("day"), col("prediction").as(name))
 
-  test("mergeColumn: first commodity creates table, second adds a column") {
+  test("mergeWide: first commodity creates table, second adds a column") {
     val t = FeatureTable(
       Files.createTempDirectory("mw").toString + "/piv", Seq("household_key", "day"))
     val s1 = Seq((1L, d("2024-01-01"), 0.9), (2L, d("2024-01-01"), 0.2))
       .toDF("household_key", "day", "prediction")
-    MergeWriter.mergeColumn(spark, t, s1, "soda")
+    MergeWriter.mergeWide(spark, t, asColumn(s1, "soda"))
     val s2 = Seq((1L, d("2024-01-01"), 0.5), (3L, d("2024-01-01"), 0.7))
       .toDF("household_key", "day", "prediction")
-    MergeWriter.mergeColumn(spark, t, s2, "chips")
+    MergeWriter.mergeWide(spark, t, asColumn(s2, "chips"))
     val got = t.read(spark)
     assert(got.columns.toSet == Set("household_key", "day", "soda", "chips"))
     val rows = got.collect().map(r => r.getAs[Long]("household_key") ->
@@ -30,14 +33,14 @@ class MergeWriterSpec extends AnyFunSuite {
     assert(rows(3L) == ((None, Some(0.7))))   // inserted by chips batch
   }
 
-  test("mergeColumn: re-scoring updates matched rows, keeps unmatched") {
+  test("mergeWide: re-scoring updates matched rows, keeps unmatched") {
     val t = FeatureTable(
       Files.createTempDirectory("mw2").toString + "/piv", Seq("household_key", "day"))
     val s1 = Seq((1L, d("2024-01-01"), 0.1), (2L, d("2024-01-01"), 0.2))
       .toDF("household_key", "day", "prediction")
-    MergeWriter.mergeColumn(spark, t, s1, "soda")
+    MergeWriter.mergeWide(spark, t, asColumn(s1, "soda"))
     val s2 = Seq((1L, d("2024-01-01"), 0.99)).toDF("household_key", "day", "prediction")
-    MergeWriter.mergeColumn(spark, t, s2, "soda")
+    MergeWriter.mergeWide(spark, t, asColumn(s2, "soda"))
     val rows = t.read(spark).collect().map(r =>
       r.getAs[Long]("household_key") -> r.getAs[Double]("soda")).toMap
     assert(rows == Map(1L -> 0.99, 2L -> 0.2))

@@ -127,7 +127,7 @@ class StreamingSpec extends AnyFunSuite {
     val d = Files.createTempDirectory("score-stream").toString
     spine.write.mode("overwrite").parquet(d)
     val stream = spark.readStream.schema(spine.schema).parquet(d)
-    val q = Scorer.scoreStream(model, stream).writeStream
+    val q = Scorer.score(model, stream).writeStream
       .format("memory").queryName("graft_scored_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
