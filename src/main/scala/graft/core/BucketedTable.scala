@@ -19,26 +19,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object BucketedTable {
 
   def write(df: DataFrame, name: String, bucketCol: String, buckets: Int): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    // an in-memory catalog can forget a table whose warehouse dir survived
-    // a previous JVM — clear the orphan location too
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val loc = java.nio.file.Paths.get(warehouse, name.toLowerCase)
-    if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(loc)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    drop(df.sparkSession, name)
     df.write.mode("overwrite")
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(name)
   }
+
+  /** Drop table `name` and its warehouse directory. An in-memory catalog
+    * can forget a table whose warehouse dir survived a previous JVM, so
+    * the orphan location is cleared even when the catalog has no entry.
+    */
+  def drop(spark: SparkSession, name: String): Unit =
+    try spark.sql(s"DROP TABLE IF EXISTS $name")
+    finally {
+      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+        .stripPrefix("file:")
+      val loc = java.nio.file.Paths.get(warehouse, name.toLowerCase)
+      if (java.nio.file.Files.exists(loc)) {
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(loc)
+        try walk.iterator().asScala.toSeq.reverse
+          .foreach(java.nio.file.Files.deleteIfExists(_))
+        finally walk.close()
+      }
+    }
 
   def read(spark: SparkSession, name: String): DataFrame = spark.table(name)
 }

@@ -19,9 +19,9 @@ import org.apache.spark.sql.SparkSession
   *    sides on the full key set. Safe here: the subset key is the
   *    well-distributed bucket key.
   *
-  * Not set here: the RangePrefix pid mode (ops/RangePrefix.scala) keeps
-  * its localCheckpoint-pin default; a deployment that must survive
-  * executor loss passes `--conf spark.graft.rangePrefix.deterministic=true`.
+  * The engine defines no Spark conf key of its own: its cutovers are
+  * parameters with measured or memory-derived defaults (e.g.
+  * `Clusters.connectedComponents`'s `driverLimit`).
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

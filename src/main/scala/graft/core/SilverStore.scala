@@ -69,7 +69,7 @@ object SilverStore {
     * let the second fixture's build drop the files backing the first's
     * pinned frame.
     */
-  private def tableName(spark: SparkSession, sfDir: String): String = {
+  private[graft] def tableName(spark: SparkSession, sfDir: String): String = {
     val pathHash = java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     ("graft_silver_" + sessionId(spark) + "_" + sfDir)
@@ -93,28 +93,35 @@ object SilverStore {
 
   private val cleanupRegistered = TrieMap.empty[String, Boolean]
 
-  /** Drop this session's cache entries (and unpersist its pinned frames)
-    * when the application ends, so the maps don't pin sessions for the JVM
-    * lifetime in long-running embedding processes.
+  /** Release this session's entries when the application ends, so the
+    * maps don't pin sessions for the JVM lifetime in long-running
+    * embedding processes and the warehouse keeps no table per run.
     */
-  private def registerCleanup(spark: SparkSession): Unit = {
-    val sid = sessionId(spark)
-    cleanupRegistered.getOrElseUpdate(sid, {
+  private def registerCleanup(spark: SparkSession): Unit =
+    cleanupRegistered.getOrElseUpdate(sessionId(spark), {
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          val prefix = sid + "|"
-          silverCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-            silverCache.remove(k).foreach(df => scala.util.Try(df.unpersist(false)))
-          }
-          boundsCache.keys.filter(_.startsWith(prefix)).foreach(boundsCache.remove)
-          controlCache.keys.filter(_.startsWith(prefix)).foreach(controlCache.remove)
-          cleanupRegistered.remove(sid)
-        }
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          release(spark)
       })
       true
     })
-    ()
+
+  /** Drop `spark`'s cache entries: unpersist its pinned silver frames and
+    * drop their bucketed tables (catalog entry and directory). Other
+    * sessions' entries and tables are untouched.
+    */
+  private[graft] def release(spark: SparkSession): Unit = {
+    val sid = sessionId(spark)
+    val prefix = sid + "|"
+    silverCache.keys.filter(_.startsWith(prefix)).foreach { k =>
+      silverCache.remove(k).foreach(df => scala.util.Try(df.unpersist(false)))
+      scala.util.Try(BucketedTable.drop(spark,
+        tableName(spark, k.stripPrefix(prefix))))
+    }
+    boundsCache.keys.filter(_.startsWith(prefix)).foreach(boundsCache.remove)
+    controlCache.keys.filter(_.startsWith(prefix)).foreach(controlCache.remove)
+    cleanupRegistered.remove(sid)
   }
 
   /** Memoized (min, max) day bounds — the per-query driver-side scalar

@@ -37,28 +37,17 @@ object Clusters {
     * the collect without GC pressure; floored at [[driverPairLimit]]
     * (the value proven in production of this repo). At the test heap
     * (~24 GiB) this yields ~1.9M pairs; at a 4 GiB cluster driver ~320k.
-    * Override per-session with `spark.graft.clusters.driverPairLimit`.
     */
   def defaultDriverPairLimit: Long =
     math.max(driverPairLimit, (Runtime.getRuntime.maxMemory * 0.02).toLong / 256L)
 
   /** pairs: (doc_a, doc_b) with doc_a < doc_b. docs: full corpus with
-    * doc_id. Returns (doc_id, cluster_id). `driverLimit < 0` (the
-    * default) resolves to `spark.graft.clusters.driverPairLimit` if set,
-    * else [[defaultDriverPairLimit]].
+    * doc_id. Returns (doc_id, cluster_id). At most `driverLimit` pairs
+    * resolve on the driver; more take the distributed loop.
     */
   def connectedComponents(docs: DataFrame, pairs: DataFrame,
-      maxIter: Int = 20, driverLimit: Long = -1L): DataFrame = {
-    val confKey = "spark.graft.clusters.driverPairLimit"
-    val resolvedLimit =
-      if (driverLimit >= 0) driverLimit
-      else docs.sparkSession.conf.getOption(confKey).map { v =>
-        // a malformed conf value must name the key, not surface as a bare
-        // NumberFormatException deep inside connectedComponents
-        require(v.nonEmpty && v.forall(_.isDigit),
-          s"$confKey must be a non-negative integer, got '$v'")
-        v.toLong
-      }.getOrElse(defaultDriverPairLimit)
+      maxIter: Int = 20,
+      driverLimit: Long = defaultDriverPairLimit): DataFrame = {
     // The candidate pair set is usually the expensive upstream (a shingle
     // self-join); cache it so the cutover probe and the consumer (collect
     // or edge loop) share ONE computation. The probe's `limit` only
@@ -68,13 +57,13 @@ object Clusters {
     val integralIds = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType)
     val small = integralIds.contains(p.schema("doc_a").dataType) &&
-      p.limit(math.min(resolvedLimit + 1, Int.MaxValue.toLong).toInt).count() <= resolvedLimit
+      p.limit(math.min(driverLimit + 1, Int.MaxValue.toLong).toInt).count() <= driverLimit
     // announce the cutover (the cosineNearDupPairs convention): the
     // memory-derived default makes this choice environment-dependent, so
     // which path ran must be visible in the logs, not inferred from plans
     System.err.println(s"[clusters] connectedComponents: " +
       (if (small) "driver union-find" else "distributed pointer-doubling") +
-      s" (limit=$resolvedLimit)")
+      s" (limit=$driverLimit)")
     if (small) {
       val out = driverComponents(docs, p)
       p.unpersist() // mapping is driver-local; out no longer depends on p

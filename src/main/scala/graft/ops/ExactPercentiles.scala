@@ -101,7 +101,7 @@ object ExactPercentiles {
     * caller collapses the fact to its value domain with one map-side-
     * combinable aggregation, and the ranking window here only ever sees
     * a calendar/grid-bounded frame per group — no range partitioning, no
-    * checkpoint pin, and the expensive upstream lineage executes once
+    * boundary sampling, and the expensive upstream lineage executes once
     * (both consumers of the domain table share its exchange via reuse)
     * instead of once per prefix branch.
     *

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Quantile normalization — map every group's distribution onto the
@@ -43,33 +42,20 @@ object QuantileNormalize {
   /** Append `normalized_value`: the global value at each row's
     * group-relative rank. `idCol` breaks ties (must make the order
     * total). Output: groupCols, idCol, valueCol, normalized_value.
-    *
-    * Regime switch (`manyTinyGroups`): see
-    * [[ExactPercentiles.perGroup]] — the grouped-prefix default is for
-    * few large groups (broadcast offsets frame is
-    * O(|partitions| + |groups|)); millions of tiny groups should take
-    * the plain per-group window instead. Identical values either way.
     */
   def perGroup(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      idCol: String, manyTinyGroups: Boolean = false): DataFrame = {
+      idCol: String): DataFrame = {
     val g = groupCols.map(col)
     val order = Seq(col(valueCol), col(idCol))
     // per-group rank + size via the grouped range-partitioned prefix — a
     // bare Window.partitionBy(group) caps parallelism at |groups| (the
     // few-large-groups trap, RangePrefix scaladoc); (value, id) makes
     // the in-group order total
-    val ranked =
-      if (manyTinyGroups) {
-        val byGroup = Window.partitionBy(g: _*).orderBy(order: _*)
-        val whole = Window.partitionBy(g: _*).rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        df.withColumn("__gr", row_number().over(byGroup).cast("long") - 1L)
-          .withColumn("__gn", count(lit(1)).over(whole))
-      } else RangePrefix.groupedPrefixSums(
-          df.withColumn("__one", lit(1L)), groupCols, order, Seq("__one"))
-        .withColumn("__gr", col("__one_cum") - 1L)
-        .withColumn("__gn", col("__one_tot"))
-        .drop("__one", "__one_cum", "__one_tot")
+    val ranked = RangePrefix.groupedPrefixSums(
+        df.withColumn("__one", lit(1L)), groupCols, order, Seq("__one"))
+      .withColumn("__gr", col("__one_cum") - 1L)
+      .withColumn("__gn", col("__one_tot"))
+      .drop("__one", "__one_cum", "__one_tot")
     val gi = globalIndexed(df.select(col(valueCol), col(idCol)), order)
     val nFrame = gi.agg(max(col("__N")).as("__N"))
     val lookup = gi.select(col("__gidx").as("__idx"),

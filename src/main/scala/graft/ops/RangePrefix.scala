@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SharedExecution
 
 /** Distributed global prefix sums under a total order — the shared
   * machinery behind [[Ntile.global]] (global row ranks), [[Drift.exactKs]]
@@ -20,13 +21,13 @@ import org.apache.spark.sql.functions._
   *     partitions before it.
   *
   * The offset frame is |shuffle partitions| rows — control-sized, its own
-  * cumulative window free. The partitioned frame is materialized ONCE
-  * before the two branches split ([[pinnedRangePartition]] — exchange
-  * reuse is NOT reliable across the self-join, and two executions of a
-  * range repartition may assign pids differently). Range partitioning
-  * keeps equal keys on one side of each boundary, so slice-local sums +
-  * offsets compose to exactly the single-task result; each consumer's
-  * spec pins equality against the naive window on randomized data.
+  * cumulative window free. Both branches (offsets and the windowed
+  * join-back) scan ONE execution of the range repartition
+  * ([[pinnedRangePartition]]), so they agree on every pid. Range
+  * partitioning keeps equal keys on one side of each boundary, so
+  * slice-local sums + offsets compose to exactly the single-task result;
+  * each consumer's spec pins equality against the naive window on
+  * randomized data.
   *
   * Callers must pass a TOTAL order (break ties — e.g. append a key
   * column), or boundary duplicates would make the prefix
@@ -34,115 +35,43 @@ import org.apache.spark.sql.functions._
   */
 object RangePrefix {
 
-  /** The partitioned-with-pid frame is MATERIALIZED once
-    * (`localCheckpoint(true)`) before its two consumers (the offsets
-    * aggregate and the windowed join-back) branch off. This is a
-    * correctness requirement, not a cache: the branch point is a
-    * self-join, whose attribute dedup re-ids one side so the range
-    * exchange is NOT reliably reused — and two independent executions of
-    * a range repartition can assign pids DIFFERENTLY (RangePartitioner
-    * samples its input, and upstream AQE-coalesced joins make row order
-    * non-deterministic between executions). The two branches then
+  /** The range-partitioned frame with its `__pid`, as a frame over ONE
+    * execution's RDD ([[org.apache.spark.sql.graftbridge.SharedExecution]]).
+    * This is a correctness requirement, not a cache: the two consumers
+    * (the offsets aggregate and the windowed join-back) meet in a
+    * self-join, whose attribute dedup re-ids one side, so exchange reuse
+    * is NOT reliable — and two independent executions of a range
+    * repartition can assign pids DIFFERENTLY (RangePartitioner samples
+    * its input, and upstream AQE-coalesced joins make row order
+    * non-deterministic between executions). The branches would then
     * disagree on pid→offset and silently corrupt prefixes — caught live
     * by theil_sen_trend going 32%-wrong (NULL medians included) the
-    * moment its input came from the bucketed silver. A checkpoint pins
-    * ONE execution, one pid assignment, for every consumer — the
-    * PageRank/Clusters iterative-materialization rule applied to a
-    * DAG that merely LOOKS tree-shaped. (Consequence for plan audits:
-    * the range exchange sits above the checkpoint scan, so consumer
-    * plans show the `__pid`-partitioned window over a checkpoint scan
-    * rather than the rangepartitioning exchange itself.)
+    * moment its input came from the bucketed silver
+    * (`RangePrefixRegressionSpec`).
     *
-    * Cluster-deployment notes: (1) the eager checkpoint runs a Spark job
-    * at DataFrame-CONSTRUCTION time — consumers that build a prefix frame
-    * and never execute it still pay one pass; (2) `localCheckpoint`
-    * blocks live on executor block managers, NOT reliable storage, so
-    * after executor loss downstream actions FAIL (fast, visibly) rather
-    * than silently recompute — which on this operator is the correct
-    * trade, because a silent recompute could re-draw pid assignments and
-    * reintroduce the exact corruption this pin exists to kill. A
-    * deployment needing executor-loss survival should set a reliable
-    * `spark.checkpoint.dir` and swap `.localCheckpoint(true)` for
-    * `.checkpoint(true)` — or pass
-    * `--conf spark.graft.rangePrefix.deterministic=true` and take the
-    * [[deterministicBucketed]] path below, which removes the pin entirely.
+    * Scanning one RDD instance, both branches share one
+    * `ShuffleDependency` and one RangePartitioner, whose bounds are fixed
+    * once sampled. If a map output is lost (executor loss), Spark
+    * recomputes it through that same partitioner, and pid is a function
+    * of the row's key against those bounds, so no row changes pid. No
+    * block needs to survive: nothing is checkpointed or cached.
+    *
+    * Building the frame plans the repartition and, under AQE, runs its
+    * sampling and shuffle map jobs, so a consumer that builds a prefix
+    * frame and never executes it still pays one pass. Plans show the
+    * `__pid`-partitioned window over a `Scan ExistingRDD` rather than the
+    * rangepartitioning exchange itself.
     */
   private def pinnedRangePartition(df: DataFrame,
       keys: Seq[Column]): DataFrame =
-    if (df.sparkSession.conf
-        .getOption("spark.graft.rangePrefix.deterministic")
-        .exists(_.toBoolean)) deterministicBucketed(df, keys)
-    else df.repartitionByRange(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-
-  /** The executor-loss-safe alternative to the checkpoint pin: `__pid`
-    * becomes a PURE FUNCTION of the row's sort key against LITERAL bucket
-    * boundaries frozen at DataFrame-construction time, so any number of
-    * independent re-executions (self-join branches, AQE re-plans, task
-    * retries after executor loss) agree on pid by construction — nothing
-    * needs pinning, and the frame recomputes safely where the checkpoint
-    * path fails hard.
-    *
-    * Boundaries come from ONE construction-time job: Spark's own
-    * RangePartitioner balances the buckets (`repartitionByRange`), and the
-    * LAST key of each partition in sort order — `row_number() = 1` under
-    * the reversed ordering — is collected (≤ |shuffle partitions| rows)
-    * and embedded as literals. The job's own sampling nondeterminism is
-    * harmless: ANY frozen boundary set yields correct prefixes, only the
-    * balance varies. pid = count of boundaries the row's key is strictly
-    * AFTER (direction- and null-ordering-aware lexicographic compare), so
-    * equal keys always share a bucket — the range-partitioning invariant
-    * the offset composition needs. Trade vs the pin: one extra source
-    * scan (boundary job) and no materialization, so the two downstream
-    * consumers may rescan the input; flip the flag per deployment.
-    */
-  private def deterministicBucketed(df: DataFrame,
-      keys: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val sks = keys.map(ColumnBridge.sortKey)
-    val kCols = sks.zipWithIndex.map { case (sk, i) => sk.child.as(s"__k$i") }
-    val keyed = df.select(kCols: _*)
-    val kTypes = keyed.schema.fields.map(_.dataType)
-    val ordK = sks.zipWithIndex.map { case (sk, i) =>
-      sk.copy(child = col(s"__k$i")) }
-    val lastPerPart = keyed
-      .repartitionByRange(ordK.map(_.asOrder): _*)
-      .withColumn("__bp", spark_partition_id())
-      .withColumn("__rn", row_number().over(Window.partitionBy(col("__bp"))
-        .orderBy(ordK.map(_.flipped): _*)))
-      .filter(col("__rn") === 1)
-      .select(col("__bp") +: sks.indices.map(i => col(s"__k$i")): _*)
-    // ≤ |shuffle partitions| boundary rows; drop the global max (rows
-    // after the second-to-last boundary form the last bucket)
-    val bounds = lastPerPart.collect().sortBy(_.getInt(0)).dropRight(1)
-    // strictly-after-in-sort-sequence vs one literal boundary component;
-    // the boundary's nullness is a DRIVER value, so branch in Scala
-    def after(sk: org.apache.spark.sql.graftbridge.ColumnBridge.SortKey,
-        bv: Any, i: Int): Column =
-      if (bv == null) { if (sk.nullsLast) lit(false) else sk.child.isNotNull }
-      else {
-        val b = lit(bv).cast(kTypes(i))
-        val cmp = if (sk.descending) sk.child < b else sk.child > b
-        if (sk.nullsLast) sk.child.isNull || cmp else coalesce(cmp, lit(false))
-      }
-    def same(sk: org.apache.spark.sql.graftbridge.ColumnBridge.SortKey,
-        bv: Any, i: Int): Column =
-      if (bv == null) sk.child.isNull else sk.child <=> lit(bv).cast(kTypes(i))
-    def lexAfter(b: org.apache.spark.sql.Row): Column =
-      sks.zipWithIndex.map { case (sk, i) => (sk, b.get(i + 1), i) }
-        .foldRight(lit(false)) { case ((sk, bv, i), rest) =>
-          after(sk, bv, i) || (same(sk, bv, i) && rest) }
-    val pid = bounds.map(b => when(lexAfter(b), 1).otherwise(0))
-      .reduceOption(_ + _).getOrElse(lit(0))
-    df.withColumn("__pid", pid)
-  }
+    SharedExecution.of(df.repartitionByRange(keys: _*)
+      .withColumn("__pid", spark_partition_id()))
 
   /** The slice-local window below needs ClusteredDistribution(__pid) —
-    * the checkpointed frame comes back with unknown partitioning, so an
-    * exchange is planned, and AQE's byte-based coalescing collapses it to
-    * ONE task whenever the frame is KB-sized (aggregated domains, pair
-    * frames) even though the window pass is the consumer's CPU. A
+    * the shared frame does not report clustering on the computed `__pid`,
+    * so an exchange is planned, and AQE's byte-based coalescing collapses
+    * it to ONE task whenever the frame is KB-sized (aggregated domains,
+    * pair frames) even though the window pass is the consumer's CPU. A
     * numbered repartition on __pid (REPARTITION_BY_NUM, exempt from
     * coalescing) pins the window stage at the session's
     * shuffle-partitions parallelism; every __pid group still lands whole

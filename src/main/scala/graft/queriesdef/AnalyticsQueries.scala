@@ -1187,7 +1187,7 @@ object AnalyticsQueries {
         // mean and the weighted percentile ranking both derive from the
         // domain table and share its exchange (reused within the one
         // plan), where the previous shape executed the lineage three
-        // times (range-prefix boundary sampling + checkpoint + the mean
+        // times (range-prefix boundary sampling + range shuffle + the mean
         // aggregate). Mean stays exact: Σ(gap·cnt) is the same integer.
         val byGap = intervals.groupBy("commodity_desc", "gap")
           .agg(count(lit(1)).as("cnt"))
@@ -1624,8 +1624,8 @@ object AnalyticsQueries {
         // manyTinyGroups: a slope group is CALENDAR-bounded (≤ C(weeks, 2)
         // rows per commodity at ANY fact scale), so the plain per-group
         // window is the scale-right shape — the grouped range-prefix
-        // machinery would range-partition + pin the pair frame, executing
-        // the self-join TWICE (boundary sampling + checkpoint; profiled as
+        // machinery would range-partition the pair frame, executing the
+        // self-join TWICE (boundary sampling + range shuffle; profiled as
         // two ~2 s single-task stages at sf0.1) for a frame whose groups
         // can never outgrow a task.
         val med = graft.ops.ExactPercentiles.perGroup(slopes,

@@ -29,22 +29,6 @@ class ClustersAndSkewSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaLoop == viaUf)
     assert(viaLoop(2L) == 0L && viaLoop(5L) == 5L)
-  }
-
-  test("spark.graft.clusters.driverPairLimit steers the cutover") {
-    val docs = Seq(0L, 1L, 2L, 3L, 4L, 5L).toDF("doc_id")
-    val pairs = Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("doc_a", "doc_b")
-    def run() = Clusters.connectedComponents(docs, pairs) // default = conf
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val key = "spark.graft.clusters.driverPairLimit"
-    // below the pair count (3): forces the distributed loop
-    spark.conf.set(key, "2")
-    val viaLoop = try run() finally spark.conf.unset(key)
-    // above it: driver union-find
-    spark.conf.set(key, "1000")
-    val viaUf = try run() finally spark.conf.unset(key)
-    assert(viaLoop == viaUf)
-    assert(viaLoop(2L) == 0L && viaLoop(5L) == 5L)
     // memory-derived default never regresses below the proven floor
     assert(Clusters.defaultDriverPairLimit >= Clusters.driverPairLimit)
   }

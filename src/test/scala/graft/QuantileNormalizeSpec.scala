@@ -56,17 +56,4 @@ class QuantileNormalizeSpec extends AnyFunSuite {
     assert(out.groupBy("grp").count().as[(String, Long)].collect().toMap
       == Map("x" -> 33L, "y" -> 67L))
   }
-
-  test("manyTinyGroups window path computes identical values") {
-    val rnd = new scala.util.Random(13)
-    val df = (1L to 300L)
-      .map(i => (i, s"g${i % 37}", rnd.nextDouble() * 50.0))
-      .toDF("id", "grp", "v").repartition(6)
-    def m(tiny: Boolean) =
-      QuantileNormalize.perGroup(df, Seq("grp"), "v", "id",
-          manyTinyGroups = tiny)
-        .select("id", "normalized_value").as[(Long, Double)]
-        .collect().toMap
-    assert(m(true) == m(false))
-  }
 }

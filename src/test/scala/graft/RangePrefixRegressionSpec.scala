@@ -11,9 +11,11 @@ import org.apache.spark.sql.expressions.Window
   * defeats exchange reuse, and RangePartitioner's sampled bounds are
   * row-order-sensitive, so the offsets branch and the windowed branch
   * disagreed on pid assignment and 32% of the medians went wrong (NULLs
-  * included). RangePrefix now pins ONE materialized execution
-  * (pinnedRangePartition); this spec replays the exact triggering shape
-  * against the naive single-task window.
+  * included). Both branches now scan ONE execution's RDD
+  * (`RangePrefix.pinnedRangePartition`); this spec replays the exact
+  * triggering shape against the naive single-task window, checks every
+  * sort shape the consumers use, and checks that a frame's prefixes
+  * survive a simulated executor loss between two executions.
   */
 class RangePrefixRegressionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -66,18 +68,11 @@ class RangePrefixRegressionSpec extends AnyFunSuite {
     } finally if (!was) graft.core.SilverStore.disable()
   }
 
-  /** The deterministic-bucketing path (spark.graft.rangePrefix.deterministic)
-    * must produce the EXACT naive-window prefixes for every sort shape the
-    * consumers use: plain asc, desc (ModelEval's score ranking), nulls in
-    * the key, composite keys, and the grouped variant. Runs each case with
-    * the flag ON and compares against a single-task `SUM OVER (ORDER BY)`.
+  /** Every sort shape the consumers use must give the EXACT naive-window
+    * prefixes: plain asc, desc (ModelEval's score ranking), nulls in the
+    * key, composite keys, and the grouped variant — each compared against
+    * a single-task `SUM OVER (ORDER BY)`.
     */
-  def withDeterministic[T](body: => T): T = {
-    spark.conf.set("spark.graft.rangePrefix.deterministic", "true")
-    try body
-    finally spark.conf.unset("spark.graft.rangePrefix.deterministic")
-  }
-
   test("deterministic path: asc/desc/null keys match the naive window") {
     val rng = new scala.util.Random(7)
     val rows = (1 to 4000).map { i =>
@@ -90,12 +85,10 @@ class RangePrefixRegressionSpec extends AnyFunSuite {
         Seq(col("v").desc, col("id").asc),
         Seq(col("s").asc, col("id").asc),       // nulls first
         Seq(col("s").desc, col("id").desc))) {  // nulls last
-      val got = withDeterministic {
-        graft.ops.RangePrefix.prefixSums(df, order, Seq("w"))
-          .select(col("id"), col("w_cum"), col("w_tot"))
-          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-          .toMap
-      }
+      val got = graft.ops.RangePrefix.prefixSums(df, order, Seq("w"))
+        .select(col("id"), col("w_cum"), col("w_tot"))
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+        .toMap
       val naive = Window.orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, 0)
       val whole = Window.rowsBetween(
@@ -117,13 +110,11 @@ class RangePrefixRegressionSpec extends AnyFunSuite {
         rng.nextInt(500).toLong, i.toLong, rng.nextInt(7).toLong)
     }
     val df = rows.toDF("g", "v", "id", "w").repartition(9)
-    val got = withDeterministic {
-      graft.ops.RangePrefix.groupedPrefixSums(df, Seq("g"),
-          Seq(col("v"), col("id")), Seq("w"))
-        .select(col("id"), col("w_cum"), col("w_tot"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-    }
+    val got = graft.ops.RangePrefix.groupedPrefixSums(df, Seq("g"),
+        Seq(col("v"), col("id")), Seq("w"))
+      .select(col("id"), col("w_cum"), col("w_tot"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
     val naive = Window.partitionBy(col("g")).orderBy(col("v"), col("id"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val whole = Window.partitionBy(col("g")).rowsBetween(
@@ -136,20 +127,57 @@ class RangePrefixRegressionSpec extends AnyFunSuite {
   }
 
   test("deterministic pid is identical across independent executions") {
-    // the property the checkpoint pin bought: re-executions agree on pid.
-    // Deterministic mode: construct ONE frame, execute it twice, compare
-    // pid multisets per key (construction freezes the boundaries, so this
-    // also holds across branch re-executions inside a self-join).
+    // re-executions of ONE frame agree on pid: construct it once,
+    // execute it twice, compare (the branches of its self-join scan the
+    // same execution, so this also holds inside one query)
     val df = (1 to 2000).map(i => (i % 613, i.toLong))
       .toDF("v", "id").repartition(11)
-    withDeterministic {
-      val pinned = graft.ops.RangePrefix.prefixSums(
-        df, Seq(col("v").asc, col("id").asc), Seq("id"))
-      val a = pinned.select("id", "id_cum").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val b = pinned.select("id", "id_cum").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(a == b)
+    val pinned = graft.ops.RangePrefix.prefixSums(
+      df, Seq(col("v").asc, col("id").asc), Seq("id"))
+    val a = pinned.select("id", "id_cum").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val b = pinned.select("id", "id_cum").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(a == b)
+  }
+
+  test("prefixes survive executor loss between two executions") {
+    // The frame is built once and collected twice; between the collects
+    // the executor's map outputs and the blocks this case persisted are
+    // lost. Lost map outputs are recomputed through the frame's one
+    // RangePartitioner, so the second collect must still equal the naive
+    // window (a checkpoint pin fails here: its blocks have no lineage).
+    import org.apache.spark.graftbridge.ExecutorLoss
+    val rng = new scala.util.Random(5)
+    val df = (1 to 3000).map { i =>
+      ("g" + rng.nextInt(3), rng.nextInt(400).toLong, i.toLong,
+        rng.nextInt(4).toLong)
+    }.toDF("g", "v", "id", "w").repartition(7)
+    val order = Seq(col("v"), col("id"))
+    def asMap(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("id"), col("w_cum"), col("w_tot")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    def naive(by: Seq[String]) = {
+      val g = Window.partitionBy(by.map(col): _*)
+      asMap(df
+        .withColumn("w_cum", sum(col("w")).over(g.orderBy(order: _*)
+          .rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("w_tot", sum(col("w")).over(g.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing))))
+    }
+    val sc = spark.sparkContext
+    for ((what, by, build) <- Seq(
+        ("prefixSums", Seq.empty[String],
+          () => graft.ops.RangePrefix.prefixSums(df, order, Seq("w"))),
+        ("groupedPrefixSums", Seq("g"),
+          () => graft.ops.RangePrefix.groupedPrefixSums(df, Seq("g"),
+            order, Seq("w"))))) {
+      val exp = naive(by)
+      val before = ExecutorLoss.persistedRddIds(sc)
+      val frame = build()
+      assert(asMap(frame) == exp, s"$what before the loss")
+      ExecutorLoss.lose(sc, before)
+      assert(asMap(frame) == exp, s"$what after the loss")
     }
   }
 }

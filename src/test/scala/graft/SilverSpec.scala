@@ -70,4 +70,34 @@ class SilverSpec extends AnyFunSuite {
       assert(c1 eq c2)
     } finally graft.core.SilverStore.disable()
   }
+
+  test("release drops the ending session's silver tables, not another's") {
+    import graft.core.SilverStore
+    val sf = "silver-release-" + System.nanoTime()
+    val (mine, other) = (spark.newSession(), spark.newSession())
+    def build(s: org.apache.spark.sql.SparkSession) =
+      s.range(10).select(col("id").as("household_key"))
+    def dir(name: String) = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
+      name.toLowerCase)
+    def exists(name: String) = spark.catalog.tableExists(name)
+    val (mt, ot) = (SilverStore.tableName(mine, sf),
+      SilverStore.tableName(other, sf))
+    val was = SilverStore.isEnabled
+    SilverStore.enable()
+    try {
+      SilverStore.silver(mine, sf)(build(mine))
+      SilverStore.silver(other, sf)(build(other))
+      assert(exists(mt) && java.nio.file.Files.exists(dir(mt)))
+      SilverStore.release(mine)
+      assert(!exists(mt), s"$mt still in the catalog")
+      assert(!java.nio.file.Files.exists(dir(mt)), s"${dir(mt)} survives")
+      assert(exists(ot) && java.nio.file.Files.exists(dir(ot)))
+      assert(SilverStore.silver(other, sf)(build(other)).count() == 10L)
+    } finally {
+      SilverStore.release(other)
+      if (!was) SilverStore.disable()
+    }
+    assert(!exists(ot) && !java.nio.file.Files.exists(dir(ot)))
+  }
 }
