@@ -13,11 +13,11 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone (oracle date/timestamp determinism),
   *  - AQE on (runtime re-planning, skew handling),
   *  - subset-key co-partitioning: joins whose inputs are both
-  *    Hash(household_key)-partitioned (the 32-bucket silver lineage) may
-  *    reuse that partitioning even when joining on (household_key,
-  *    commodity_desc) — the conservative default would re-shuffle both
-  *    sides on the full key set. Safe here: the subset key is the
-  *    well-distributed bucket key.
+  *    Hash(household_key)-partitioned (the silver lineage, one bucket
+  *    per shuffle partition) may reuse that partitioning even when
+  *    joining on (household_key, commodity_desc) — the conservative
+  *    default would re-shuffle both sides on the full key set. Safe
+  *    here: the subset key is the well-distributed bucket key.
   *
   * The engine defines no Spark conf key of its own: its cutovers are
   * parameters with measured or memory-derived defaults (e.g.

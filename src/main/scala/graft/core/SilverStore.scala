@@ -18,14 +18,21 @@ import org.apache.spark.storage.StorageLevel
   * library users opt in per session), the first request for a fixture dir
   * materializes the silver projection once as a table BUCKETED BY
   * `household_key` — the join/group key of every feature, label and
-  * training-set stage — and pins the bucketed scan in memory.
+  * training-set stage — into one bucket per shuffle partition of the
+  * building session, and pins the bucketed scan in memory.
   * Consequences:
   *
   *   - the lineitem⋈orders join runs exactly once per (session, fixture);
   *   - `groupBy(household_key…)` / joins on household_key over silver
   *     need NO Exchange (the bucketed scan already delivers
-  *     HashPartitioning(household_key, buckets), which the in-memory
-  *     relation preserves — pinned by PlanSpec);
+  *     HashPartitioning(household_key, shuffle partitions), which the
+  *     in-memory relation preserves — pinned by PlanSpec);
+  *   - every household-keyed stage downstream (features, labels, training
+  *     set, the scoring spine) runs one task per shuffle partition: a
+  *     fixed bucket count above the session's cores would cost each of
+  *     those stages that many tasks' fixed overhead (deserializing the
+  *     ~390-column plan, one wide parquet writer per file, GC) whatever
+  *     the data size;
   *   - at cluster scale the same call becomes "write the silver table
   *     bucketed/partitioned at ingest"; the API stays the same.
   *
@@ -41,8 +48,6 @@ object SilverStore {
     */
   def disable(): Unit = enabledFlag = false
   def isEnabled: Boolean = enabledFlag
-
-  val buckets: Int = 32
 
   private val silverCache = TrieMap.empty[String, DataFrame]
   private val boundsCache = TrieMap.empty[String, (LocalDate, LocalDate)]
@@ -84,7 +89,8 @@ object SilverStore {
     else silverCache.getOrElseUpdate(key(spark, sfDir), {
       registerCleanup(spark)
       val name = tableName(spark, sfDir)
-      BucketedTable.write(build, name, "household_key", buckets)
+      BucketedTable.write(build, name, "household_key",
+        spark.sessionState.conf.numShufflePartitions)
       val df = BucketedTable.read(spark, name)
       df.persist(StorageLevel.MEMORY_AND_DISK)
       df.count() // warm the cache eagerly so the first query isn't charged

@@ -32,8 +32,8 @@ import MetricDefs.AggKind
   * expansion: none. Shuffle volume: one pruned pass per entity with
   * map-side dedup, instead of a 13×-expanded full pass.
   *
-  * On the bucketed silver table (SilverStore: 32 buckets on
-  * `household_key`) every one of these aggregations and joins for the
+  * On the bucketed silver table (SilverStore: one bucket per shuffle
+  * partition on `household_key`) every one of these aggregations and joins for the
   * household and household×commodity grains satisfies its clustering from
   * the bucket partitioning (`Hash(household_key)` ⊆ every grouping set),
   * so the whole feature build runs with ZERO exchanges — pinned by

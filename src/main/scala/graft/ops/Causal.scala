@@ -181,6 +181,8 @@ object Causal {
       sum(col("t")).as("n_treat"),
       sum(col("t") * col("c")).as("conv_treat"),
       sum((lit(1L) - col("t")) * col("c")).as("conv_ctrl"))
+    // no partitionBy: `per` is exactly the 10 decile rows, so the
+    // cumulative window runs over a constant-sized frame
     val cum = Window.orderBy(col("decile"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val nt = col("n_treat"); val nc = col("n") - col("n_treat")

@@ -46,7 +46,9 @@ object Compaction {
       .rowsBetween(Window.unboundedPreceding, -1)
     val withLocal = manifest.withColumn("__local_before",
       coalesce(sum(col(bytesCol)).over(local), lit(0L)))
-    // tiny control frame: per-shard byte totals → exclusive offsets
+    // tiny control frame: per-shard byte totals → exclusive offsets; one
+    // row per shard (|shards| rows, a coarsening of the layout order), so
+    // its offsets window needs no partitionBy
     val offsets = manifest.groupBy(col(shardCol))
       .agg(sum(col(bytesCol)).as("__shard_bytes"))
       .withColumn("__offset", coalesce(

@@ -138,6 +138,10 @@ object SeriesStats {
     */
   def changepoint(series: DataFrame): DataFrame = {
     val s = toInt(series)
+    // no partitionBy: the input is ONE series of per-period aggregates
+    // (`spend_changepoint`'s weekly spend: one row per week of the
+    // day horizon), calendar-sized at any fact size, so the running
+    // window's single task holds series rows, never fact rows
     val byT = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val whole = Window.rowsBetween(

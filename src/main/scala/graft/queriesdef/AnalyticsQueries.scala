@@ -672,6 +672,8 @@ object AnalyticsQueries {
           .withColumn("dn",
             datediff(col("day"), lit("1992-01-01")).cast("long"))
           .withColumn("dow", (col("dn") % 7).cast("long"))
+        // no partitionBy: `daily` holds one row per day with sales, so
+        // the single-task window is calendar-sized at any fact size
         val w = Window.orderBy(col("dn")).rangeBetween(-3, 3)
         val trended = daily
           .withColumn("n_win", count(lit(1)).over(w))
@@ -1042,6 +1044,9 @@ object AnalyticsQueries {
           .agg(count(lit(1)).as("n_recs"))
         val tot = byCommodity.agg(sum(col("n_recs")).cast("long")
           .as("total_recs"))
+        // no partitionBy: `byCommodity` holds one row per recommended
+        // commodity (a dimension, |commodities| rows), so the single-task
+        // rank and running share run over catalog-sized input
         val rankW = Window.orderBy(col("n_recs").desc, col("commodity_desc"))
         byCommodity.crossJoin(broadcast(tot))
           .withColumn("pop_rank", row_number().over(rankW).cast("long"))

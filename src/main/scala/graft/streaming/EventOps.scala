@@ -366,6 +366,8 @@ object EventOps {
     val full = cal.join(daily, Seq("day"), "left_outer")
       .select(col("day"),
         coalesce(col("n_events"), lit(0L)).as("n_events"))
+    // no partitionBy: `full` is the calendar spine, one row per day
+    // between the bounds, so the single-task window is calendar-sized
     val w = Window.orderBy(col("day")).rowsBetween(-28, -1)
     full
       .withColumn("n_base", count(lit(1)).over(w))

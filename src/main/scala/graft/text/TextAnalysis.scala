@@ -202,6 +202,8 @@ object TextAnalysis {
     val agg = perDoc.groupBy("term").agg(
       sum(col("c")).cast("long").as("tf"),
       count(lit(1)).as("df"))
+    // the rank window needs no partitionBy: it runs after `limit(k)`,
+    // over at most k rows
     agg.orderBy(col("tf").desc, col("term").asc).limit(k)
       .withColumn("rank",
         row_number().over(Window.orderBy(col("tf").desc, col("term").asc))
@@ -245,6 +247,8 @@ object TextAnalysis {
     val agg = perDoc.groupBy("term").agg(
       sum(col("c")).cast("long").as("tf"),
       count(lit(1)).as("df"))
+    // the rank window needs no partitionBy: it runs after `limit(k)`,
+    // over at most k rows
     agg.orderBy(col("tf").desc, col("term").asc).limit(k)
       .withColumn("rank",
         row_number().over(Window.orderBy(col("tf").desc, col("term").asc))

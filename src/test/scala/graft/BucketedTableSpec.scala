@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.core.BucketedTable
 
 class BucketedTableSpec extends AnyFunSuite {
@@ -25,31 +25,49 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(smj.count() == n)
   }
 
+  /** Hash(household_key) from the silver buckets (one per shuffle
+    * partition of `s`) satisfies every clustering the split-distinct
+    * builder needs — groupBy(hk), groupBy(hk, entity), the per-entity
+    * second stages, and the joins back on hk — so the whole feature table
+    * derives without ONE shuffle.
+    */
+  private def assertFeatureBuildsDoNotShuffle(s: SparkSession): Unit = {
+    val tx = graft.silver.TransactionsAdj(s, "/root/testdata/sf0.001")
+    val df = graft.features.FeatureBuilder.build(
+      tx, graft.features.FeatureBuilder.household)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"bucketed household feature build must not shuffle:\n${plan.take(4000)}")
+    assert(df.count() > 0)
+    assert(df.rdd.getNumPartitions == s.sessionState.conf.numShufflePartitions,
+      "one feature task per silver bucket, one bucket per shuffle partition")
+    // the household×commodity grain rides the same buckets: with
+    // subset-key co-partitioning enabled (GraftSession conf), its joins on
+    // (household_key, commodity_desc) reuse Hash(household_key) too
+    val txc = graft.features.FeatureBuilder.txWithCommodity(
+      s, "/root/testdata/sf0.001")
+    val hc = graft.features.FeatureBuilder.build(
+      txc, graft.features.FeatureBuilder.householdCommodity)
+    val hcPlan = hc.queryExecution.executedPlan.toString
+    assert(!hcPlan.contains("Exchange hashpartitioning"),
+      s"bucketed hh-commodity feature build must not shuffle:\n${hcPlan.take(4000)}")
+  }
+
   test("household feature build over bucketed silver plans with ZERO exchanges") {
-    // Hash(household_key) from the 32 silver buckets satisfies every
-    // clustering the split-distinct builder needs — groupBy(hk),
-    // groupBy(hk, entity), the per-entity second stages, and the joins
-    // back on hk — so the whole feature table derives without ONE shuffle.
     graft.core.SilverStore.enable()
-    try {
-      val tx = graft.silver.TransactionsAdj(spark, "/root/testdata/sf0.001")
-      val df = graft.features.FeatureBuilder.build(
-        tx, graft.features.FeatureBuilder.household)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed household feature build must not shuffle:\n${plan.take(4000)}")
-      assert(df.count() > 0)
-      // the household×commodity grain rides the same buckets: with
-      // subset-key co-partitioning enabled (TestSpark conf), its joins on
-      // (household_key, commodity_desc) reuse Hash(household_key) too
-      val txc = graft.features.FeatureBuilder.txWithCommodity(
-        spark, "/root/testdata/sf0.001")
-      val hc = graft.features.FeatureBuilder.build(
-        txc, graft.features.FeatureBuilder.householdCommodity)
-      val hcPlan = hc.queryExecution.executedPlan.toString
-      assert(!hcPlan.contains("Exchange hashpartitioning"),
-        s"bucketed hh-commodity feature build must not shuffle:\n${hcPlan.take(4000)}")
-    } finally graft.core.SilverStore.disable()
+    try assertFeatureBuildsDoNotShuffle(spark)
+    finally graft.core.SilverStore.disable()
+  }
+
+  test("ZERO exchanges also when the session has 3 shuffle partitions") {
+    val three = spark.newSession()
+    three.conf.set("spark.sql.shuffle.partitions", "3")
+    graft.core.SilverStore.enable()
+    try assertFeatureBuildsDoNotShuffle(three)
+    finally {
+      graft.core.SilverStore.release(three)
+      graft.core.SilverStore.disable()
+    }
   }
 
   test("bucketed vs plain: plain join does shuffle (control)") {

@@ -95,7 +95,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(unpivoted == want, "unpivoted sink differs from full-width scoring")
     assert(pivoted == want, "pivoted sink differs from full-width scoring")
     // 150 households × k rows fill less than one column batch; the
-    // bucketed silver table's 32 partitions must not carry over
+    // bucketed silver table's partitions (one per shuffle partition)
+    // must not carry over
     val wasBucketed = SilverStore.isEnabled
     SilverStore.enable()
     try {

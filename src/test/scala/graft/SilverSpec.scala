@@ -100,4 +100,27 @@ class SilverSpec extends AnyFunSuite {
     }
     assert(!exists(ot) && !java.nio.file.Files.exists(dir(ot)))
   }
+
+  test("silver buckets follow the session's shuffle partitions") {
+    import graft.core.SilverStore
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val sf = "silver-buckets-" + System.nanoTime()
+    val sessions = Seq(4, 3).map { n =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      n -> s
+    }
+    val was = SilverStore.isEnabled
+    SilverStore.enable()
+    try sessions.foreach { case (n, s) =>
+      SilverStore.silver(s, sf)(s.range(10).select(col("id").as("household_key")))
+      val name = SilverStore.tableName(s, sf)
+      val spec = s.sessionState.catalog
+        .getTableMetadata(TableIdentifier(name)).bucketSpec
+      assert(spec.map(_.numBuckets).contains(n), s"$name: $spec, want $n buckets")
+    } finally {
+      sessions.foreach { case (_, s) => SilverStore.release(s) }
+      if (!was) SilverStore.disable()
+    }
+  }
 }
