@@ -7,6 +7,7 @@ import graft.core.BucketedTable
 class BucketedTableSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
 
   test("bucketed-bucketed equi-join plans without a shuffle exchange") {
     val n = 5000
@@ -32,7 +33,7 @@ class BucketedTableSpec extends AnyFunSuite {
     * derives without ONE shuffle.
     */
   private def assertFeatureBuildsDoNotShuffle(s: SparkSession): Unit = {
-    val tx = graft.silver.TransactionsAdj(s, "/root/testdata/sf0.001")
+    val tx = graft.silver.TransactionsAdj(s, sf)
     val df = graft.features.FeatureBuilder.build(
       tx, graft.features.FeatureBuilder.household)
     val plan = df.queryExecution.executedPlan.toString
@@ -44,8 +45,7 @@ class BucketedTableSpec extends AnyFunSuite {
     // the household×commodity grain rides the same buckets: with
     // subset-key co-partitioning enabled (GraftSession conf), its joins on
     // (household_key, commodity_desc) reuse Hash(household_key) too
-    val txc = graft.features.FeatureBuilder.txWithCommodity(
-      s, "/root/testdata/sf0.001")
+    val txc = graft.features.FeatureBuilder.txWithCommodity(s, sf)
     val hc = graft.features.FeatureBuilder.build(
       txc, graft.features.FeatureBuilder.householdCommodity)
     val hcPlan = hc.queryExecution.executedPlan.toString
