@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Retail
 import graft.silver.TransactionsAdj
-import MetricDefs.AggKind
+import MetricDefs.Engine
 
 /** Re-expression of the reference's `get_features` (`04a:116-561`) as a
   * declarative, shuffle-minimal feature builder.
@@ -18,12 +18,14 @@ import MetricDefs.AggKind
   * fill 0.0, `04a:556-558`/`04a:595` semantics), then one ratio
   * projection.
   *
-  * Exact distinct counts (the ~48 `COUNT(DISTINCT CASE WHEN …)` aggregates)
-  * are NOT computed in that same pass: Catalyst's
-  * `RewriteDistinctAggregates` would Expand the input once per distinct
-  * group (~13×) through the shuffle — the SURVEY §4 hotspot, and a
-  * scale-killer at 100 TB. Day distincts are plain counts over the
-  * (keys, day) pre-aggregate. The rest split per distinct ENTITY
+  * Each aggregate runs in exactly one pass, chosen by its
+  * [[MetricDefs.Engine]]: [[MetricDefs.Engine.OverDays]] aggregates
+  * (sums, counts, recency and the day distincts) reduce the (keys, day)
+  * pre-aggregate. Exact basket/product distinct counts are NOT computed
+  * in that pass: Catalyst's `RewriteDistinctAggregates` would Expand the
+  * input once per distinct group (~13×) through the shuffle — the SURVEY
+  * §4 hotspot, and a scale-killer at 100 TB. They are
+  * [[MetricDefs.Engine.PerEntity]] and split per distinct ENTITY
   * (basket_id / product_id): for each entity the builder
   * pre-aggregates boolean "seen under condition" indicators on
   * `(grain keys, entity)` — a plain, map-side-combinable aggregation over
@@ -77,8 +79,7 @@ object FeatureBuilder {
       referenceExact: Boolean = false): DataFrame = {
     val (_, cur) = knownBounds.getOrElse(bounds(fact))
     val wins = WindowSpec.windows(cur)
-    val aggs = wins.flatMap(w =>
-      MetricDefs.aggsFor(w, referenceExact, precomputed = true))
+    val aggs = wins.flatMap(w => MetricDefs.aggsFor(w, referenceExact))
     val posts = wins.flatMap(MetricDefs.ratiosFor)
 
     // Pre-filter to the union of all windows: lets parquet skip row groups
@@ -97,12 +98,12 @@ object FeatureBuilder {
         lit(java.sql.Date.valueOf(w.start)), lit(java.sql.Date.valueOf(w.end)))
         .as(MetricDefs.winFlagCol(w)))
     // Hoist every expression the ~430 aggregates share into ONE physical
-    // column each (the `precomputed = true` contract of
-    // MetricDefs.aggsFor): 4 window-membership booleans, 4 flag
-    // positivity booleans, 6 decimal money copies. The aggregate update
-    // loop then reads a column instead of re-evaluating the expression —
-    // the DOUBLE→DECIMAL cast in particular allocates per evaluation and
-    // previously ran at 24 cast sites per row (4 windows × 6 metrics).
+    // column each (the helper columns MetricDefs' engine forms read): 4
+    // window-membership booleans, 4 flag positivity booleans, 6 decimal
+    // money copies. The aggregate update loop then reads a column
+    // instead of re-evaluating the expression — the DOUBLE→DECIMAL cast
+    // in particular allocates per evaluation and previously ran at 24
+    // cast sites per row (4 windows × 6 metrics).
     val pre =
       winFlags ++
       MetricDefs.flagMetrics.map(m =>
@@ -129,43 +130,44 @@ object FeatureBuilder {
     // span and the join chain carries only pass-through columns.
     def cleanDouble(c: Column): Column = coalesce(c.cast("double"), lit(0.0))
 
-    // Day fusion (MetricDefs.dayPartials scaladoc): every plain
-    // aggregate AND the day-entity distincts reduce exactly over a
-    // (keys, day) pre-aggregate, so the widest pass — ~88 conditional
-    // aggregates — runs over keys × horizon-days rows instead of fact
-    // rows. Stage 1 is ~21 narrow, window-independent, map-combinable
-    // partials. Measured against the single-pass wide aggregate on the
-    // daily_score benchmark: 19.5 s vs 25.3 s of feature-build job wall,
-    // 22 vs 25 jobs (6 of 6 paired runs).
+    // Day fusion (MetricDefs.dayPartials scaladoc): every OverDays
+    // aggregate reduces exactly over a (keys, day) pre-aggregate, so the
+    // widest pass — ~88 conditional aggregates — runs over keys ×
+    // horizon-days rows instead of fact rows. Stage 1 is ~21 narrow,
+    // window-independent, map-combinable partials. Measured against the
+    // single-pass wide aggregate on the daily_score benchmark: 19.5 s vs
+    // 25.3 s of feature-build job wall, 22 vs 25 jobs (6 of 6 paired runs).
     val partials = MetricDefs.dayPartials(referenceExact)
     val dayKeyed = prefiltered
       .groupBy((keyCols :+ col("day")): _*)
       .agg(partials.head, partials.tail: _*)
     val dayFrame = dayKeyed.select(dayKeyed.columns.map(col).toSeq ++ winFlags: _*)
-    val fusedCols = wins.flatMap(w => MetricDefs.fusedDayAggs(w, referenceExact))
-      .map(a => cleanDouble(a.col).as(a.name))
+    val fusedCols = aggs.collect {
+      case MetricDefs.AggDef(name, _, _, Engine.OverDays(fused)) =>
+        cleanDouble(fused).as(name)
+    }
     val dayDf = dayFrame.groupBy(keyCols: _*)
       .agg(fusedCols.head, fusedCols.tail: _*)
 
-    // The basket/product exact distincts cannot reduce by day (an entity
-    // may span days). Per entity — stage 1: per (keys, entity), has any
+    // The PerEntity distincts cannot reduce by day (an entity may span
+    // days). Per entity — stage 1: per (keys, entity), has any
     // row satisfied each window/flag condition? Null entities are
     // excluded, matching COUNT(DISTINCT CASE …)'s null-skipping. Stage 2:
     // per keys, count the entities seen under each condition (sum of 0/1
     // indicators ≡ exact distinct count).
-    val dist = aggs.flatMap(a => a.kind match {
-      case d: AggKind.DistinctOf if d.entity != "day" => Some((a, d))
-      case _ => None
-    })
-    val entityCounts = dist.map(_._2.entity).distinct.map { e =>
-      val forE = dist.filter(_._2.entity == e)
-      val indicators = forE.map { case (a, d) =>
-        max(when(d.cond && col(e).isNotNull, lit(1))).as(s"seen__${a.name}")
+    val dist = aggs.collect {
+      case MetricDefs.AggDef(name, _, _, Engine.PerEntity(entity, cond)) =>
+        (name, entity, cond)
+    }
+    val entityCounts = dist.map(_._2).distinct.map { e =>
+      val forE = dist.filter(_._2 == e)
+      val indicators = forE.map { case (name, _, cond) =>
+        max(when(cond && col(e).isNotNull, lit(1))).as(s"seen__$name")
       }
       val seen = prefiltered.groupBy((keyCols :+ col(e)): _*)
         .agg(indicators.head, indicators.tail: _*)
-      val counts = forE.map { case (a, _) =>
-        cleanDouble(sum(col(s"seen__${a.name}"))).as(a.name)
+      val counts = forE.map { case (name, _, _) =>
+        cleanDouble(sum(col(s"seen__$name"))).as(name)
       }
       seen.groupBy(keyCols: _*).agg(counts.head, counts.tail: _*)
     }
@@ -174,12 +176,9 @@ object FeatureBuilder {
     val agged =
       entityCounts.foldLeft(dayDf)((acc, df) => acc.join(df, grain.keys, "inner"))
 
-    // canonical metric order after the joins (pass-through projection; the
-    // DOUBLE cast + 0.0 fill happened inside each aggregate above). A
-    // metric missing from every pass fails here, at construction.
-    val cleaned = agged.select(keyCols ++ aggs.map(a => col(a.name)): _*)
-
-    cleaned.select(
+    // canonical metric order after the joins (the DOUBLE cast + 0.0 fill
+    // happened inside each aggregate above), then the ratios
+    agged.select(
       (keyCols ++ aggs.map(a => col(a.name))
         ++ posts.map(p => p.col.as(p.name))): _*)
   }

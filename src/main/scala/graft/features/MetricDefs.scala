@@ -8,11 +8,20 @@ import org.apache.spark.sql.functions._
 /** Declarative metric catalog for the feature builder.
   *
   * The reference builds ~90 metrics per window as 268 lines of sequential
-  * `withColumn`s (`04a:183-525`); here each metric is DATA — a name, a
-  * Spark `Column`, and the equivalent DuckDB SQL — generated from one list
-  * of definitions. One generated `select` = one Project node = one
-  * whole-stage-codegen span, and the oracle SQL can never drift from the
-  * Spark expression because both render from the same definition.
+  * `withColumn`s (`04a:183-525`); here each metric is DATA, declared ONCE
+  * in [[aggsFor]] with every form it is executed in:
+  *
+  *  - `sql`: the DuckDB SQL over the fact, the oracle
+  *    ([[FeatureBuilder.cteChain]]);
+  *  - `reference`: the single-pass Spark column over the fact, the form
+  *    FeatureSpec checks the builder against;
+  *  - `engine`: what [[FeatureBuilder.build]] runs — a stage-2 column over
+  *    the per-day partials ([[Engine.OverDays]]) or an exact per-entity
+  *    distinct count ([[Engine.PerEntity]]).
+  *
+  * So the oracle SQL, the reference and the engine form can never drift
+  * apart by name, and one generated `select` = one Project node = one
+  * whole-stage-codegen span.
   *
   * Aggregate conventions (see queriesdef.Oracle): money sums go through
   * DECIMAL(18,4); conditional distinct counts are
@@ -21,29 +30,31 @@ import org.apache.spark.sql.functions._
   * `days_in_window - 1` (A5, `04a:527-546`: both the anchor `max_day` and
   * the floor `min_day` are the window-adjusted bounds, so the 1yr recency
   * is measured against the 1yr slice's end, not the dataset's newest day).
-  *
-  * Exact distinct counts carry an [[AggKind.DistinctOf]] tag so the
-  * builder can restructure them as per-entity pre-aggregates instead of
-  * letting Catalyst's `RewriteDistinctAggregates` Expand the input ~13×
-  * (SURVEY.md §4 mitigation #1); the SQL rendering stays the plain
-  * `COUNT(DISTINCT CASE WHEN …)` either way.
   */
 object MetricDefs {
 
-  /** How an aggregate is computed at scale. */
-  sealed trait AggKind
-  object AggKind {
-    /** Algebraic aggregate (sum/count/min) — map-side combinable as-is. */
-    case object Plain extends AggKind
-    /** Exact `COUNT(DISTINCT entity)` over rows matching `cond`; the
-      * builder turns these into indicator pre-aggregates per entity.
+  /** How the builder computes an aggregate. */
+  sealed trait Engine
+  object Engine {
+    /** Stage-2 column over the [[dayPartials]] frame: the aggregate
+      * reduces exactly over per-(keys, day) partials (proof on
+      * [[dayPartials]]).
       */
-    final case class DistinctOf(entity: String, cond: Column) extends AggKind
+    final case class OverDays(fused: Column) extends Engine
+    /** Exact `COUNT(DISTINCT entity)` over rows matching `cond` (over the
+      * builder's helper columns): an entity may span days, so the builder
+      * turns these into indicator pre-aggregates per entity instead of
+      * letting Catalyst's `RewriteDistinctAggregates` Expand the input
+      * ~13× (SURVEY.md §4 mitigation #1).
+      */
+    final case class PerEntity(entity: String, cond: Column) extends Engine
   }
 
-  /** One aggregate output: Spark expression + DuckDB SQL over the fact. */
-  final case class AggDef(name: String, col: Column, sql: String,
-      kind: AggKind = AggKind.Plain)
+  /** One aggregate output: oracle SQL and single-pass reference over the
+    * fact, and the form the builder runs.
+    */
+  final case class AggDef(name: String, sql: String, reference: Column,
+      engine: Engine)
 
   /** One post-aggregation (ratio) output over the cleaned agg columns. */
   final case class PostDef(name: String, col: Column, sql: String)
@@ -63,14 +74,12 @@ object MetricDefs {
 
   private def dlit(d: LocalDate): Column = lit(Date.valueOf(d))
 
-  /** Names of the precomputed per-row helper columns the builder's
-    * pre-projection adds when `precomputed = true` (see
-    * [[graft.features.FeatureBuilder.build]]): one boolean per window,
-    * one boolean per flag metric, one DECIMAL(18,4) copy per money
-    * metric. Hoisting them into physical columns evaluates each ONCE per
-    * row instead of once per referencing aggregate — the money cast in
-    * particular allocates per evaluation (24 window×metric cast sites
-    * collapse to 6 casts/row).
+  /** Names of the per-row helper columns the builder's pre-projection adds
+    * (see [[graft.features.FeatureBuilder.build]]) and the engine forms
+    * read: one boolean per window, one boolean per flag metric, one
+    * DECIMAL(18,4) copy per money metric. Hoisting them into physical
+    * columns evaluates each ONCE per row instead of once per referencing
+    * aggregate — the money cast in particular allocates per evaluation.
     */
   def winFlagCol(w: WindowDef): String = s"__w_${w.name}"
   def posFlagCol(m: String): String = s"__pos_$m"
@@ -82,20 +91,27 @@ object MetricDefs {
     * chain — one logical aggregation for all windows (scale redesign,
     * SURVEY.md §4).
     */
-  def aggsFor(w: WindowDef, referenceExact: Boolean = false,
-      precomputed: Boolean = false): Seq[AggDef] = {
-    val inWin =
-      if (precomputed) col(winFlagCol(w))
-      else col("day").between(dlit(w.start), dlit(w.end))
-    def pos(m: String): Column =
-      if (precomputed) col(posFlagCol(m)) else col(m) > 0.0
-    def moneyDec(m: String): Column =
-      if (precomputed) col(decCol(m)) else col(m).cast("decimal(18,4)")
-    val inWinSql = s"day BETWEEN ${w.startSql} AND ${w.endSql}"
+  def aggsFor(w: WindowDef, referenceExact: Boolean = false): Seq[AggDef] = {
+    import Engine._
     val s = w.name
-    def distinctOf(entity: String, extra: Option[String]): AggKind.DistinctOf =
-      AggKind.DistinctOf(entity,
-        extra.fold(inWin)(m => inWin && pos(m)))
+    // reference forms read the fact, engine forms the builder's helpers
+    val inWin = col("day").between(dlit(w.start), dlit(w.end))
+    val inWinSql = s"day BETWEEN ${w.startSql} AND ${w.endSql}"
+    val inWinE = col(winFlagCol(w))
+    def pos(m: String): Column = col(m) > 0.0
+    def hasPos(m: String): Column = col(s"__dp_haspos_$m") === 1
+    // exact distinct count of `k` under (window ∧ flag m); day distincts
+    // fuse over the partials, basket/product ones split per entity
+    def distinctOf(name: String, k: String, flag: Option[String]): AggDef = {
+      val cond = flag.fold(inWin)(m => inWin && pos(m))
+      val condSql = flag.fold(inWinSql)(m => s"$inWinSql AND $m > 0.0")
+      val engine =
+        if (k == "day")
+          OverDays(count(when(flag.fold(inWinE)(m => inWinE && hasPos(m)), lit(1))))
+        else PerEntity(k, flag.fold(inWinE)(m => inWinE && col(posFlagCol(m))))
+      AggDef(name, s"COUNT(DISTINCT CASE WHEN $condSql THEN $k END)",
+        countDistinct(when(cond, col(k))), engine)
+    }
 
     // A2: base multi-aggregates (`04a:183-199`). Deliberate departure,
     // made OPT-OUT by `referenceExact`: the reference's `products` is a
@@ -110,49 +126,42 @@ object MetricDefs {
     // counts are countDistinct in the reference too, `04a:229-241`.)
     val productsAgg =
       if (referenceExact)
-        AggDef(s"products_$s", count(when(inWin, col("product_id"))),
-          s"COUNT(CASE WHEN $inWinSql THEN product_id END)")
-      else
-        AggDef(s"products_$s", countDistinct(when(inWin, col("product_id"))),
-          s"COUNT(DISTINCT CASE WHEN $inWinSql THEN product_id END)",
-          distinctOf("product_id", None))
+        AggDef(s"products_$s", s"COUNT(CASE WHEN $inWinSql THEN product_id END)",
+          count(when(inWin, col("product_id"))),
+          OverDays(sum(when(inWinE, col("__dp_pid")))))
+      else distinctOf(s"products_$s", "product_id", None)
     val base = Seq(
-      AggDef(s"days_$s", countDistinct(when(inWin, col("day"))),
-        s"COUNT(DISTINCT CASE WHEN $inWinSql THEN day END)",
-        distinctOf("day", None)),
-      AggDef(s"baskets_$s", countDistinct(when(inWin, col("basket_id"))),
-        s"COUNT(DISTINCT CASE WHEN $inWinSql THEN basket_id END)",
-        distinctOf("basket_id", None)),
+      distinctOf(s"days_$s", "day", None),
+      distinctOf(s"baskets_$s", "basket_id", None),
       productsAgg,
-      AggDef(s"line_items_$s", count(when(inWin, lit(1))),
-        s"COUNT(CASE WHEN $inWinSql THEN 1 END)"),
-      AggDef(s"units_$s", sum(when(inWin, col("units"))),
-        s"SUM(CASE WHEN $inWinSql THEN units END)"))
+      AggDef(s"line_items_$s", s"COUNT(CASE WHEN $inWinSql THEN 1 END)",
+        count(when(inWin, lit(1))),
+        OverDays(sum(when(inWinE, col("__dp_lines"))))),
+      AggDef(s"units_$s", s"SUM(CASE WHEN $inWinSql THEN units END)",
+        sum(when(inWin, col("units"))),
+        OverDays(sum(when(inWinE, col("__dp_units"))))))
 
     // A2: money sums (exact decimal accumulation)
     val money = moneyMetrics.map { m =>
       AggDef(s"${m}_$s",
-        sum(when(inWin, moneyDec(m))).cast("double"),
-        s"CAST(SUM(CAST(CASE WHEN $inWinSql THEN $m END AS DECIMAL(18,4))) AS DOUBLE)")
+        s"CAST(SUM(CAST(CASE WHEN $inWinSql THEN $m END AS DECIMAL(18,4))) AS DOUBLE)",
+        sum(when(inWin, col(m).cast("decimal(18,4)"))).cast("double"),
+        OverDays(sum(when(inWinE, col(s"__dp_dec_$m"))).cast("double")))
     }
 
     // A3: conditional distinct counts — 4 flag metrics × 3 entities,
     // reference-exact names (`04a:201-241`: `days_with_<metric>`, …)
     val condDistinct = flagMetrics.flatMap { m =>
       Seq("day" -> "days", "basket_id" -> "baskets", "product_id" -> "products")
-        .map { case (k, kn) =>
-          AggDef(s"${kn}_with_${m}_$s",
-            countDistinct(when(inWin && pos(m), col(k))),
-            s"COUNT(DISTINCT CASE WHEN $inWinSql AND $m > 0.0 THEN $k END)",
-            distinctOf(k, Some(m)))
-        }
+        .map { case (k, kn) => distinctOf(s"${kn}_with_${m}_$s", k, Some(m)) }
     }
 
     // A4: conditional counts (`04a:243-255`: `line_items_with_<metric>`)
     val condCount = flagMetrics.map { m =>
       AggDef(s"line_items_with_${m}_$s",
+        s"COUNT(CASE WHEN $inWinSql AND $m > 0.0 THEN 1 END)",
         count(when(inWin && pos(m), lit(1))),
-        s"COUNT(CASE WHEN $inWinSql AND $m > 0.0 THEN 1 END)")
+        OverDays(sum(when(inWinE, col(s"__dp_licnt_$m")))))
     }
 
     // A5: recency (days since last event), the reference's exact form
@@ -176,33 +185,37 @@ object MetricDefs {
     val ddSql = s"datediff('day', day, ${w.endSql})"
     val sinceFloor = datediff(dlit(w.end), dlit(w.start))
     val sinceFloorSql = s"datediff('day', ${w.startSql}, ${w.endSql})"
+    val daysSinceAny = min(when(inScan, dd))
     val daysSince =
-      AggDef(s"days_since_$s",
-        min(when(inScan, dd)),
-        s"MIN(CASE WHEN $inScanSql THEN $ddSql END)") +:
+      AggDef(s"days_since_$s", s"MIN(CASE WHEN $inScanSql THEN $ddSql END)",
+        daysSinceAny, OverDays(daysSinceAny)) +:
         flagMetrics.map { m =>
           AggDef(s"days_since_${m}_$s",
+            s"MIN(CASE WHEN $inScanSql THEN (CASE WHEN $m > 0.0 THEN $ddSql ELSE $sinceFloorSql END) END)",
             min(when(inScan, when(pos(m), dd).otherwise(sinceFloor))),
-            s"MIN(CASE WHEN $inScanSql THEN (CASE WHEN $m > 0.0 THEN $ddSql ELSE $sinceFloorSql END) END)")
+            OverDays(min(when(inScan,
+              when(hasPos(m),
+                when(col(s"__dp_hasnonpos_$m") === 1, least(dd, sinceFloor))
+                  .otherwise(dd))
+                .otherwise(sinceFloor)))))
         }
 
     base ++ money ++ condDistinct ++ condCount ++ daysSince
   }
 
-  /** Two-stage "day fusion" of every aggregate whose value is a pure
-    * function of per-day partials (guide §2.3 "aggregate before you
-    * shuffle", applied to per-row CPU: the wide conditional aggregates
-    * were the measured cost of a grain build — 18-48 s of task CPU at
-    * sf0.1 — and most of them reduce EXACTLY over a (grain keys, day)
-    * pre-aggregate whose cardinality is bounded by keys × horizon days,
-    * not by fact rows).
+  /** Stage 1 of the two-stage "day fusion" behind every [[Engine.OverDays]]
+    * aggregate (guide §2.3 "aggregate before you shuffle", applied to
+    * per-row CPU: the wide conditional aggregates were the measured cost
+    * of a grain build — 18-48 s of task CPU at sf0.1 — and most of them
+    * reduce EXACTLY over a (grain keys, day) pre-aggregate whose
+    * cardinality is bounded by keys × horizon days, not by fact rows).
     *
-    * Stage 1 ([[dayPartials]]) groups by (keys, day) and computes ~21
-    * WINDOW-INDEPENDENT partials: row/units/product counts, exact
-    * decimal money sums, per-flag conditional row counts, and per-flag
-    * has-positive / has-non-positive indicators. Stage 2
-    * ([[fusedDayAggs]]) reduces those partials per key with the window
-    * conditions folded in — value-identical to the single-pass forms:
+    * Grouped by (keys, day), these ~21 WINDOW-INDEPENDENT partials are
+    * row/units/product counts, exact decimal money sums, per-flag
+    * conditional row counts, and per-flag has-positive / has-non-positive
+    * indicators. Each `OverDays(fused)` column then reduces them per key
+    * with the window conditions folded in, value-identical to its
+    * `reference`:
     *
     *  - `COUNT(DISTINCT CASE WHEN inWin THEN day END)` ≡ `COUNT(CASE
     *    WHEN inWin THEN 1 END)` over one-row-per-day partials;
@@ -218,10 +231,8 @@ object MetricDefs {
     *    ELSE, i.e. null flags count as non-positive — preserved.)
     *
     * Only the basket/product exact-distinct families cannot reduce by
-    * day (an entity may span days) — they keep their per-entity split
-    * passes. The oracle SQL is untouched: names and SQL render from the
-    * SAME [[aggsFor]] list; FeatureSpec pins every fused column against
-    * the [[aggsFor]] single-pass reference.
+    * day (an entity may span days) — they are [[Engine.PerEntity]].
+    * FeatureSpec pins every engine column against its `reference`.
     */
   def dayPartials(referenceExact: Boolean): Seq[Column] = {
     val base = Seq(
@@ -238,50 +249,6 @@ object MetricDefs {
           .as(s"__dp_hasnonpos_$m"))
     }
     base ++ money ++ flags
-  }
-
-  /** Stage-2 columns over the [[dayPartials]] frame for window `w`: one
-    * entry per aggregate of [[aggsFor]] that day-fuses (everything except
-    * the basket/product distincts). Names match [[aggsFor]] exactly.
-    */
-  def fusedDayAggs(w: WindowDef, referenceExact: Boolean): Seq[AggDef] = {
-    val s = w.name
-    val inWin = col(winFlagCol(w))
-    val productsAgg =
-      if (referenceExact)
-        Some(AggDef(s"products_$s", sum(when(inWin, col("__dp_pid"))), ""))
-      else None
-    val base = Seq(
-      AggDef(s"days_$s", count(when(inWin, lit(1))), "")) ++
-      productsAgg ++ Seq(
-      AggDef(s"line_items_$s", sum(when(inWin, col("__dp_lines"))), ""),
-      AggDef(s"units_$s", sum(when(inWin, col("__dp_units"))), ""))
-    val money = moneyMetrics.map { m =>
-      AggDef(s"${m}_$s",
-        sum(when(inWin, col(s"__dp_dec_$m"))).cast("double"), "")
-    }
-    val condDistinctDay = flagMetrics.map { m =>
-      AggDef(s"days_with_${m}_$s",
-        count(when(inWin && col(s"__dp_haspos_$m") === 1, lit(1))), "")
-    }
-    val condCount = flagMetrics.map { m =>
-      AggDef(s"line_items_with_${m}_$s",
-        sum(when(inWin, col(s"__dp_licnt_$m"))), "")
-    }
-    val inScan = col("day") <= dlit(w.end)
-    val dd = datediff(dlit(w.end), col("day"))
-    val sinceFloor = datediff(dlit(w.end), dlit(w.start))
-    val daysSince =
-      AggDef(s"days_since_$s", min(when(inScan, dd)), "") +:
-        flagMetrics.map { m =>
-          AggDef(s"days_since_${m}_$s",
-            min(when(inScan,
-              when(col(s"__dp_haspos_$m") === 1,
-                when(col(s"__dp_hasnonpos_$m") === 1, least(dd, sinceFloor))
-                  .otherwise(dd))
-                .otherwise(sinceFloor))), "")
-        }
-    base ++ money ++ condDistinctDay ++ condCount ++ daysSince
   }
 
   /** Null-safe ratio, one definition for the builder and the oracle SQL.

@@ -107,6 +107,18 @@ final class PropensityPipeline(spark: SparkSession, cfg: PipelineConfig) {
     TrainingSetBuilder.Lookup(householdCommodityFeatures.read(spark),
       Seq("household_key", "commodity_desc"), "household_commodity__"))
 
+  /** (commodity_desc, commodity_clean) of every scored commodity.
+    * Sanitation (F5) is lossy — two commodities must never share a clean
+    * name, or their models and score columns would silently cross-wire.
+    */
+  private def cleanNames(): Seq[(String, String)] = {
+    val cs = commodities.select("commodity_desc", "commodity_clean")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    require(cs.map(_._2).distinct.size == cs.size,
+      s"commodity_clean collision in ${cs.map(_._2).mkString(",")}")
+    cs
+  }
+
   /** Weekly (`04b`): labels at cur−30, PIT-join features, one model per
     * commodity, promoted to Production.
     */
@@ -117,12 +129,7 @@ final class PropensityPipeline(spark: SparkSession, cfg: PipelineConfig) {
     val trainingSet = TrainingSetBuilder.build(labels, lookups).cache()
     try {
     val featureCols = trainingSet.columns.toSeq.filter(c => c.contains("__"))
-    val cs = commodities.select("commodity_desc", "commodity_clean")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    // sanitation (F5) is lossy — two commodities must never share a clean
-    // name or their models/score columns would silently cross-wire
-    require(cs.map(_._2).distinct.size == cs.size,
-      s"commodity_clean collision in ${cs.map(_._2).mkString(",")}")
+    val cs = cleanNames()
     val ratios = LabelBuilder.posRatio(labels)
       .filter(col("purchased") === 1)
       .select("commodity_desc", "class_ratio")
@@ -158,13 +165,7 @@ final class PropensityPipeline(spark: SparkSession, cfg: PipelineConfig) {
     * instead of failing the whole daily job.
     */
   def productionModels(): Seq[(String, String, PipelineModel)] = {
-    val all = commodities.select("commodity_desc", "commodity_clean")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    // same collision guard as trainAll: two descs sanitizing to one
-    // clean name would score both against one model
-    require(all.map(_._2).distinct.size == all.size,
-      s"commodity_clean collision in ${all.map(_._2).mkString(",")}")
-    val (cs, missing) = all.partition { case (_, clean) => models.hasProduction(clean) }
+    val (cs, missing) = cleanNames().partition { case (_, clean) => models.hasProduction(clean) }
     missing.foreach { case (desc, clean) =>
       System.err.println(s"[scoreAll] skipping '$desc': no Production model '$clean'")
     }

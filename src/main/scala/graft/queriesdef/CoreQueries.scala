@@ -271,9 +271,12 @@ object CoreQueries {
     // The sketch family's ORACLED accuracy contract (the ann_recall_audit
     // pattern): HLL internals are engine-specific, but "every group's
     // estimate lands within ε of the exact distinct count" is checkable —
-    // Spark counts the exceedances (deterministic: an HLL estimate is a
-    // pure function of the input SET, order- and partitioning-free), the
-    // oracle derives the group universe exactly and asserts zero. A
+    // Spark counts the exceedances, the oracle derives the group universe
+    // exactly and asserts zero. The merged estimate itself is NOT a pure
+    // function of the input set: it can move with how the per-day sketches
+    // are partitioned and merged (`sketch_distinct_merge` has given one
+    // commodity 1111 over 32 silver buckets and 1112 over 4), and the ε
+    // bound below absorbs that wobble, so the exceedance count is stable. A
     // degraded sketch shows up as n_exceed > 0 → hash FAIL. The lgConfigK=12
     // datasketches HLL has RSE ≈ 1.04/√4096 ≈ 1.6%, so a 5% bound is only
     // ~3σ — with hundreds of commodity groups a single unlucky group at a

@@ -320,9 +320,10 @@ object TrainScoreQueries {
     // … WHERE 1=2, then INSERT OVERWRITE … SELECT * FROM TEMP__…) — this
     // entry runs that exact surface through spark.sql against the session
     // catalog (managed parquet table in the warehouse dir), not the
-    // FeatureTable analog. DROP first keeps reruns across fixtures clean;
-    // the reference's truncate-and-replace semantics come from the
-    // INSERT OVERWRITE itself.
+    // FeatureTable analog. DROP first (`BucketedTable.drop`, which also
+    // sweeps a warehouse dir a previous JVM's catalog left behind) keeps
+    // reruns across fixtures clean; the reference's truncate-and-replace
+    // semantics come from the INSERT OVERWRITE itself.
     Entry(
       "sql_staging",
       (s, dir) => {
@@ -338,21 +339,7 @@ object TrainScoreQueries {
           .select(col("household_key"), lit(curD).as("day"),
             col("commodity_desc"), col("prediction"))
           .createOrReplaceTempView("TEMP__graft_propensities_unpivoted")
-        s.sql("DROP TABLE IF EXISTS graft_propensities_unpivoted")
-        // the in-memory catalog cannot DROP a location a PREVIOUS JVM's
-        // catalog created — sweep the orphaned warehouse dir so CREATE
-        // does not fail with LOCATION_ALREADY_EXISTS
-        val orphan = java.nio.file.Paths.get(
-          new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-            .getPath, "graft_propensities_unpivoted")
-        if (java.nio.file.Files.isDirectory(orphan)) {
-          val walk = java.nio.file.Files.walk(orphan)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          } finally walk.close()
-        }
+        graft.core.BucketedTable.drop(s, "graft_propensities_unpivoted")
         s.sql("""CREATE TABLE IF NOT EXISTS graft_propensities_unpivoted AS
                 |  SELECT * FROM TEMP__graft_propensities_unpivoted WHERE 1=2""".stripMargin)
         s.sql("""INSERT OVERWRITE graft_propensities_unpivoted

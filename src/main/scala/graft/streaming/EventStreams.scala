@@ -52,50 +52,34 @@ object EventStreams {
   /** Stateful sessionization with flatMapGroupsWithState: the streaming
     * twin of EventOps.sessionize (same 30-minute gap). State per user is
     * one open session; a session closes (emits) when a new event arrives
-    * past the gap, or on processing-time timeout.
+    * past the gap. No timeout is armed, so a bounded replay (AvailableNow)
+    * terminates, and each user's last session stays open in state.
     */
-  /** `withTimeout = true` arms a processing-time timeout that flushes idle
-    * open sessions on a live stream; leave false for bounded replays
-    * (AvailableNow) — an armed timeout keeps scheduling wake-up batches and
-    * the query never terminates.
-    */
-  def sessionizeStream(spark: SparkSession, ev: DataFrame,
-      withTimeout: Boolean = false): Dataset[SessionOut] = {
+  def sessionizeStream(spark: SparkSession, ev: DataFrame): Dataset[SessionOut] = {
     import spark.implicits._
     val gapMs = EventOps.sessionGapSeconds * 1000L
-    val timeoutConf =
-      if (withTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     ev.select("event_id", "ts", "user_id", "event_type", "value").as[Event]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, events: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(s =>
-              SessionOut(userId, s.start, s.last, s.nEvents, s.sumValue))
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.ts.getTime - s.last.getTime <= gapMs =>
-                  cur = Some(s.copy(last = e.ts, nEvents = s.nEvents + 1,
-                    sumValue = s.sumValue + e.value))
-                case Some(s) =>
-                  closed ::= SessionOut(userId, s.start, s.last, s.nEvents, s.sumValue)
-                  cur = Some(SessionState(e.ts, e.ts, 1L, e.value))
-                case None =>
-                  cur = Some(SessionState(e.ts, e.ts, 1L, e.value))
-              }
+          val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+          var closed = List.empty[SessionOut]
+          var cur = state.getOption
+          sorted.foreach { e =>
+            cur match {
+              case Some(s) if e.ts.getTime - s.last.getTime <= gapMs =>
+                cur = Some(s.copy(last = e.ts, nEvents = s.nEvents + 1,
+                  sumValue = s.sumValue + e.value))
+              case Some(s) =>
+                closed ::= SessionOut(userId, s.start, s.last, s.nEvents, s.sumValue)
+                cur = Some(SessionState(e.ts, e.ts, 1L, e.value))
+              case None =>
+                cur = Some(SessionState(e.ts, e.ts, 1L, e.value))
             }
-            cur.foreach(state.update)
-            if (withTimeout) state.setTimeoutDuration(gapMs)
-            closed.reverseIterator
           }
+          cur.foreach(state.update)
+          closed.reverseIterator
       }
   }
 

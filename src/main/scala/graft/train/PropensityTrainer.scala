@@ -220,9 +220,12 @@ object PropensityTrainer {
     val estimator = cfg.algo match {
       case "lr" =>
         new LogisticRegression().setWeightCol("weight").setMaxIter(cfg.maxIter)
-      case _ =>
+      case "gbt" =>
         new GBTClassifier()
           .setWeightCol("weight").setMaxIter(cfg.maxIter).setSeed(cfg.seed)
+      case other =>
+        throw new IllegalArgumentException(
+          s"PropensityTrainer: unknown algo '$other' (allowed: gbt, lr)")
     }
     val evaluator = new BinaryClassificationEvaluator()
       .setMetricName("areaUnderPR")

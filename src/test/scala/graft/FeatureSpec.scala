@@ -119,7 +119,7 @@ class FeatureSpec extends AnyFunSuite {
     // (incl. the 1yr same-season slice), flags randomly zero/positive,
     // null product_ids to exercise COUNT(DISTINCT)'s null-skipping; both
     // `products` renderings (distinct default, plain referenceExact), so
-    // every day-fused column is pinned to its aggsFor definition
+    // every engine form is pinned to its aggsFor reference
     for (referenceExact <- Seq(false, true); seed <- Seq(11, 42, 99)) {
       val rnd = new scala.util.Random(seed)
       val dayPool = (0 to 95).map(cur.minusDays(_)) ++ (330 to 400).map(cur.minusDays(_))
@@ -151,8 +151,8 @@ class FeatureSpec extends AnyFunSuite {
       val fPref = f.filter(col("day").between(
         lit(java.sql.Date.valueOf(cur.minusDays(364))), lit(java.sql.Date.valueOf(cur))))
       val naiveAgged = fPref.groupBy(col("household_key"))
-        .agg(aggs.head.col.as(aggs.head.name),
-          aggs.tail.map(a => a.col.as(a.name)): _*)
+        .agg(aggs.head.reference.as(aggs.head.name),
+          aggs.tail.map(a => a.reference.as(a.name)): _*)
       val naiveClean = naiveAgged.select(
         col("household_key") +:
           aggs.map(a => coalesce(col(a.name).cast("double"), lit(0.0)).as(a.name)): _*)

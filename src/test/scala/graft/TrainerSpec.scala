@@ -176,4 +176,21 @@ class TrainerSpec extends AnyFunSuite {
     assert(!m.balancedAccuracy.isNaN && !m.mcc.isNaN, s"metrics: $m")
     assert(model.transform(df).count() == 150)
   }
+
+  test("an unknown algo fails before any fit, naming the allowed values") {
+    val df = PropensityTrainer.withWeights(toy(50), posRatio = 0.4)
+    val sc = spark.sparkContext
+    val group = "trainer-unknown-algo"
+    sc.setJobGroup(group, "no fit may run for an unknown algo")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        PropensityTrainer.train(df, Seq("household__f1", "household__f2"),
+          PropensityTrainer.Config(algo = "LR", regParams = Seq(0.0), maxIter = 5,
+            parallelism = 1))
+      }
+      assert(e.getMessage.contains("'LR'") && e.getMessage.contains("gbt, lr"),
+        e.getMessage)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    } finally sc.clearJobGroup()
+  }
 }
